@@ -413,61 +413,6 @@ object BenchWorker {
     }
     def gcPause(): Unit = { System.gc(); Thread.sleep(300) }
 
-    if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")) {
-      // stage-cost breakdown for scaling analysis: generate-only,
-      // generate+shuffle (no kernel), full pipeline
-      import org.apache.spark.sql.functions.{col, hash, pmod, sum}
-      def genOnly(): Double = fusedDocs.map { n =>
-        val t0 = System.nanoTime()
-        ExtractionPipeline.synthDocs(spark, n, parallelism = parts)
-          .mapPartitions(it => Iterator.single(it.map(_.spans.size).sum))(
-            org.apache.spark.sql.Encoders.scalaInt)
-          .agg(sum(col("value"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.getOrElse(-1.0)
-      def genShuffle(): Double = fusedDocs.map { n =>
-        val t0 = System.nanoTime()
-        ExtractionPipeline.synthDocs(spark, n, parallelism = parts)
-          .repartition(parts, pmod(hash(col("doc_id")), lit(parts)))
-          .mapPartitions(it => Iterator.single(it.size))(
-            org.apache.spark.sql.Encoders.scalaInt)
-          .agg(sum(col("value"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.getOrElse(-1.0)
-      def genShufflePacked(): Double = fusedDocs.map { n =>
-        import spark.implicits._
-        val t0 = System.nanoTime()
-        ExtractionPipeline.synthDocs(spark, n, parallelism = parts)
-          .map(d => (d.doc_id, graft.pipeline.SpanCodec.pack(d.spans)))
-          .repartition(parts, pmod(hash(col("_1")), lit(parts)))
-          .mapPartitions(it => Iterator.single(it.size))(
-            org.apache.spark.sql.Encoders.scalaInt)
-          .agg(sum(col("value"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.getOrElse(-1.0)
-      def fullRow(): Double = {
-        // row-form twin of onePass (which runs the packSpans default)
-        val docs = fusedDocs match {
-          case Some(n) => ExtractionPipeline.synthDocs(spark, n, parallelism = parts)
-          case None    => spark.read.parquet(corpus).as[graft.model.Doc](
-            org.apache.spark.sql.Encoders.product[graft.model.Doc])
-        }
-        val t0 = System.nanoTime()
-        ExtractionPipeline.extract(docs,
-          ExtractionPipeline.Config(numPartitions = parts, packSpans = false))
-          .agg(count(lit(1)), sum("n_pages"), sum("n_spans")).collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      (1 to 3).foreach { i =>
-        // alternate packed/row FULL passes back-to-back so both sample the
-        // same noise window — the honest A/B for the packSpans default
-        System.err.println(f"DEBUG l$level pass$i gen=${genOnly()}%.2f " +
-          f"genShuffle=${genShuffle()}%.2f " +
-          f"genShufflePacked=${genShufflePacked()}%.2f " +
-          f"fullPacked=${onePass()._1}%.2f fullRow=${fullRow()}%.2f")
-      }
-    }
-
     println("READY")
     System.out.flush()
     val stdin = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))

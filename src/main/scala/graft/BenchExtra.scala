@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Extra (non-contract) measurement mains for optimization rounds — the
   * guide §1.4 noop-sink isolation harness. NOT part of the driver's bench
   * contract (`graft.Bench` is frozen); numbers from here are cited in
@@ -13,9 +11,11 @@ import org.apache.spark.sql.functions._
   *       print per-run seconds (same session config as the bench battery).
   *   graft.BenchExtra explain <sfDir> <outDir> <query>[,...]
   *     — write `.explain("formatted")` for each query to <outDir>/<query>.txt
-  *   graft.BenchExtra jobs <sfDir> <query>
-  *     — run the query once with a job listener, print per-job wall times
-  *       and descriptions (where the d8-style multi-job queries spend).
+  *   graft.BenchExtra explain-final <sfDir> <outDir> <query>[,...]
+  *     — run each query through a drain first, then write its FINAL
+  *       adaptive plan to <outDir>/<query>.final.txt
+  *
+  * Per-job wall times come from perfbench's traced runs (job-group spans).
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -70,45 +70,6 @@ object BenchExtra {
             java.nio.file.Paths.get(outDir, s"$name.final.txt"),
             txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           println(s"wrote $outDir/$name.final.txt")
-        }
-      case "jobs" =>
-        val name = args(2)
-        val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        val done = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, String)]
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.put(js.jobId, (System.nanoTime(),
-                Option(js.properties.getProperty("spark.job.description"))
-                  .getOrElse("")))
-            override def onJobEnd(
-                je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-              Option(jobs.get(je.jobId)).foreach { case (t0, d) =>
-                done.synchronized {
-                  done += ((je.jobId, (System.nanoTime() - t0) / 1e9, d)): Unit
-                }
-              }
-            }
-          })
-        // warmup pass (codegen) then measured pass
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        // listener events ride an async bus: give the warmup's trailing
-        // onJobEnd events time to land before clearing, or they pollute
-        // the measured table
-        Thread.sleep(500)
-        done.synchronized(done.clear())
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        done.synchronized {
-          done.sortBy(_._1).foreach { case (id, sec, d) =>
-            println(f"job $id%3d ${sec}%7.3f s  $d")
-          }
-          println(f"jobs=${done.size} jobSecSum=${done.map(_._2).sum}%.3f wall=$wall%.3f")
         }
       case other => sys.error(s"unknown mode $other")
     }

@@ -9,26 +9,71 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * spark-submit --class graft.Main ocrdeploymentspark.jar \
   *   extract    --in <docs.parquet> --out <dir> [--partitions P] [--salt S] \
-  *              [--mode prompt_layout_all_en] [--split-oversized] \
-  *   resumable  --in <docs.parquet> --out <dir> [--buckets B] [--per-commit K]
-  *   stream     --in <dir> --out <dir> --checkpoint <dir>
-  *   synth      --out <dir> --docs N
+  *              [--mode prompt_layout_all_en]
+  *   resumable  --in <docs.parquet> --out <dir> [--buckets B] [--per-commit K] \
+  *              [--partitions P] [--salt S] [--mode M]
+  *   stream     --in <dir> --out <dir> --checkpoint <dir> [--mode M]
+  *   synth      --out <dir> [--docs N] [--partitions P]
   * }}}
   *
-  * On a cluster the session comes from spark-submit (master/executors from
-  * the submit conf); `local[32]` is only the sandbox fallback.
+  * Flags are checked before the session is built: an unknown flag, a flag
+  * without a value, a non-numeric count or a missing required flag fails
+  * at once. On a cluster the session comes from spark-submit
+  * (master/executors from the submit conf); `local[32]` is only the
+  * sandbox fallback.
   */
 object Main {
 
-  private def arg(args: Array[String], key: String): Option[String] = {
-    val i = args.indexOf(s"--$key")
-    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
+  private final case class Subcommand(required: Set[String], optional: Set[String])
+
+  private val Subcommands: Map[String, Subcommand] = Map(
+    "extract" -> Subcommand(Set("in", "out"), Set("partitions", "salt", "mode")),
+    "resumable" -> Subcommand(Set("in", "out"),
+      Set("buckets", "per-commit", "partitions", "salt", "mode")),
+    "stream" -> Subcommand(Set("in", "out", "checkpoint"), Set("mode")),
+    "synth" -> Subcommand(Set("out"), Set("docs", "partitions")))
+
+  private val NumericFlags = Set("partitions", "salt", "buckets", "per-commit", "docs")
+
+  /** A checked command line: the subcommand and its `--name value` flags. */
+  private[graft] final case class Args(cmd: String, flags: Map[String, String]) {
+    def req(name: String): String = flags(name) // presence checked by `parse`
+    def opt(name: String): Option[String] = flags.get(name)
   }
-  private def flag(args: Array[String], key: String): Boolean =
-    args.contains(s"--$key")
+
+  private[graft] def parse(args: Array[String]): Args = {
+    require(args.nonEmpty,
+      s"subcommand required: ${Subcommands.keys.toSeq.sorted.mkString("|")}")
+    val cmd = args(0)
+    val sub = Subcommands.getOrElse(cmd,
+      throw new IllegalArgumentException(s"unknown subcommand $cmd"))
+    val known = sub.required ++ sub.optional
+    @annotation.tailrec
+    def flags(rest: List[String], acc: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => acc
+        case k :: tail =>
+          val name = k.stripPrefix("--")
+          require(k.startsWith("--") && known(name), s"unknown flag '$k' for " +
+            s"subcommand $cmd (known: ${known.toSeq.sorted.map("--" + _).mkString(" ")})")
+          tail match {
+            case v :: more if !v.startsWith("--") =>
+              require(!NumericFlags(name) ||
+                v.toLongOption.exists(n => name == "docs" || n.isValidInt),
+                s"flag $k needs a number, got '$v'")
+              flags(more, acc + (name -> v))
+            case _ => throw new IllegalArgumentException(s"flag $k needs a value")
+          }
+      }
+    val parsed = flags(args.toList.tail, Map.empty)
+    sub.required.toSeq.sorted.foreach { name =>
+      require(parsed.contains(name), s"missing required flag --$name for subcommand $cmd")
+    }
+    Args(cmd, parsed)
+  }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "subcommand required: extract|resumable|stream|synth")
+    val a = parse(args)
     val spark = SparkSession.builder()
       .appName("graft-extract")
       .config("spark.sql.adaptive.enabled", "true")
@@ -41,19 +86,15 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     val cfg = ExtractionPipeline.Config(
-      numPartitions = arg(args, "partitions").map(_.toInt)
+      numPartitions = a.opt("partitions").map(_.toInt)
         .getOrElse(spark.sparkContext.defaultParallelism * 4),
-      salt = arg(args, "salt").map(_.toInt).getOrElse(0),
-      mode = arg(args, "mode").getOrElse(graft.kernel.Router.LayoutAll),
-      splitOversized = flag(args, "split-oversized"))
+      salt = a.opt("salt").map(_.toInt).getOrElse(0),
+      mode = a.opt("mode").getOrElse(graft.kernel.Router.LayoutAll))
 
-    def req(name: String): String = arg(args, name).getOrElse(
-      sys.error(s"missing required flag --$name for subcommand ${args(0)}"))
-    args(0) match {
+    a.cmd match {
       case "extract" =>
-        val in = req("in")
-        val out = req("out")
-        val results = ExtractionPipeline.extract(DocSources.readDocs(spark, in), cfg)
+        val out = a.req("out")
+        val results = ExtractionPipeline.extract(DocSources.readDocs(spark, a.req("in")), cfg)
         DocSources.writeResults(results, out)
         // re-read for metrics (results would otherwise recompute); the
         // partition dir column comes back as STRING, so cast it
@@ -66,21 +107,20 @@ object Main {
           .write.mode("overwrite").parquet(s"$out/_metrics")
       case "resumable" =>
         val report = Snapshot.run(
-          DocSources.readDocs(spark, arg(args, "in").get),
-          arg(args, "out").get, cfg,
-          nBuckets = arg(args, "buckets").map(_.toInt).getOrElse(64),
-          bucketsPerCommit = arg(args, "per-commit").map(_.toInt).getOrElse(8))
+          DocSources.readDocs(spark, a.req("in")),
+          a.req("out"), cfg,
+          nBuckets = a.opt("buckets").map(_.toInt).getOrElse(64),
+          bucketsPerCommit = a.opt("per-commit").map(_.toInt).getOrElse(8))
         println(s"resumable run: ran=${report.bucketsRun.mkString(",")} " +
           s"skipped=${report.bucketsSkipped.mkString(",")}")
       case "stream" =>
-        graft.streaming.StreamingExtract.run(spark, arg(args, "in").get,
-          arg(args, "out").get, arg(args, "checkpoint").get, cfg.mode)
+        graft.streaming.StreamingExtract.run(spark, a.req("in"),
+          a.req("out"), a.req("checkpoint"), cfg.mode)
           .awaitTermination()
       case "synth" =>
-        ExtractionPipeline.synthDocs(spark, arg(args, "docs").map(_.toLong).getOrElse(100000L),
+        ExtractionPipeline.synthDocs(spark, a.opt("docs").map(_.toLong).getOrElse(100000L),
             parallelism = cfg.numPartitions)
-          .write.mode("overwrite").parquet(arg(args, "out").get)
-      case other => sys.error(s"unknown subcommand $other")
+          .write.mode("overwrite").parquet(a.req("out"))
     }
     spark.stop()
   }

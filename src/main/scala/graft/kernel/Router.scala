@@ -32,8 +32,6 @@ object Router {
   /** P1: dict lookup with passthrough fallback (modal_gpu.py:302). */
   def resolvePrompt(mode: String): String = PromptDict.getOrElse(mode, mode)
 
-  def isKnownMode(mode: String): Boolean = PromptDict.contains(mode)
-
   /** P2: grounding bbox requirement. */
   def groundingOk(mode: String, bbox: Option[Seq[Double]]): Boolean =
     mode != GroundingOcr || bbox.exists(_.length == 4)

@@ -10,16 +10,13 @@ import org.apache.spark.sql.functions._
 /** The distributed extraction job: `Dataset[Doc]` → `Dataset[DocResult]`.
   *
   * Scale design (north rule: partitioning/shuffle/skew explicit, 10^12 docs):
-  *  - **Salted repartition** by `pmod(hash(doc_id) + salt, P)` ahead of the
-  *    kernel so hot key ranges cannot pile into one task (the reference's
+  *  - **Salted repartition** by the full-range `hash(doc_id) + salt` ahead
+  *    of the kernel so hot key ranges cannot pile into one task (the reference's
   *    single-container 1000-image batch is exactly this failure mode,
   *    tests/test_batch_limits.py:195-201).
-  *  - **Oversized-doc defusal**: documents above `oversizedSpanThreshold`
-  *    input spans are exploded into page-aligned chunks, extracted
-  *    independently, and reassembled with a keyed group — so the long tail
-  *    of 200-page monsters parallelizes instead of straggling. Small docs
-  *    (the vast majority) take the zero-shuffle fast path; the union keeps
-  *    one narrow stage for them.
+  *  - **Packed spans across the exchange**: each doc's span array is
+  *    shipped as one [[SpanCodec]] blob and unpacked right before the
+  *    kernel, so the salting exchange is the job's only shuffle.
   *  - **Executor-warm kernel**: the kernel is a JVM object (lazy-initialized
   *    per executor, like the reference's @modal.enter one-time model load,
   *    modal_gpu.py:92-179); `mapPartitions` amortizes any setup across the
@@ -32,25 +29,7 @@ object ExtractionPipeline {
   final case class Config(
       numPartitions: Int = 32,
       salt: Int = 0,
-      oversizedSpanThreshold: Int = 64,
-      pagesPerChunk: Int = 16,
-      mode: String = graft.kernel.Router.LayoutAll,
-      /** Route oversized docs through the explode/reassemble path (adds a
-        * second source scan + shuffle). Worth it when per-page work is
-        * expensive (a real OCR model ~seconds/page, as in the reference);
-        * leave off for cheap kernels where salting alone levels the load —
-        * a 250-page doc costs ~10ms here, far below task granularity.
-        * Takes PRECEDENCE over `packSpans`: the split path needs span
-        * structure on both sides of its chunk shuffle, so it always ships
-        * rows. */
-      splitOversized: Boolean = false,
-      /** Ship span arrays across the salting exchange packed into one
-        * binary blob per doc (SpanCodec) instead of UnsafeRow
-        * array-of-struct — fewer fixed bytes on the shared DRAM bus for
-        * per-core pack/unpack cycles. Kept as a flag for honest A/B
-        * against the row form (BenchWorker debug mode exercises both).
-        * Ignored when `splitOversized` is set (see its doc). */
-      packSpans: Boolean = true)
+      mode: String = graft.kernel.Router.LayoutAll)
 
   /** Deterministic synthetic corpus as a Dataset — embarrassingly parallel,
     * zero shuffle, no stored input (scales to any nDocs). */
@@ -59,54 +38,6 @@ object ExtractionPipeline {
                 parallelism: Int = 32): Dataset[Doc] = {
     import spark.implicits._
     spark.range(0L, nDocs, 1L, parallelism).map(id => Synth.docFor(seed, id))
-  }
-
-  private[pipeline] final case class Chunk(doc_id: String, chunk_idx: Int, spans: Seq[Span])
-
-  /** Split an oversized doc into page-aligned chunks (a chunk boundary is
-    * always a text span = page start, so per-page semantics are preserved). */
-  private[pipeline] def chunkDoc(doc: Doc, pagesPerChunk: Int): Seq[Chunk] = {
-    val spans = doc.spans.sortBy(_.offset)
-    val chunks = Vector.newBuilder[Chunk]
-    val cur = Vector.newBuilder[Span]
-    var pagesInCur = 0
-    var nChunks = 0
-    var curHasContent = false
-    def flush(): Unit = if (curHasContent) {
-      chunks += Chunk(doc.doc_id, nChunks, cur.result())
-      nChunks += 1
-      cur.clear(); pagesInCur = 0; curHasContent = false
-    }
-    spans.foreach { s =>
-      val startsPage = s.kind != Kinds.MediaKind
-      if (startsPage) {
-        if (pagesInCur >= pagesPerChunk) flush()
-        pagesInCur += 1
-      }
-      cur += s; curHasContent = true
-    }
-    flush()
-    chunks.result()
-  }
-
-  /** Reassemble chunk results into the whole-doc result: concatenate in
-    * chunk order, renumber offsets, combine failure codes by severity —
-    * exactly what the single-pass kernel computes. */
-  private[pipeline] def reassemble(docId: String, parts: Seq[(Int, DocResult)]): DocResult = {
-    val sorted = parts.sortBy(_._1).map(_._2)
-    val spans = Vector.newBuilder[Span]
-    var off = 0
-    var code = FailureCodes.Ok
-    var pages = 0
-    var nanos = 0L
-    sorted.foreach { r =>
-      r.spans.foreach { s => spans += s.copy(offset = off); off += 1 }
-      code = FailureCodes.worse(code, r.failure_code)
-      pages += r.n_pages
-      nanos += r.kernel_nanos
-    }
-    DocResult(docId, spans.result(), success = !FailureCodes.isFatal(code),
-      code, off, pages, TaskContext.getPartitionId(), nanos)
   }
 
   def extract(docs: Dataset[Doc], cfg: Config = Config()): Dataset[DocResult] = {
@@ -125,67 +56,24 @@ object ExtractionPipeline {
     // for skew defusal.
     val opts = Extract.Options(mode = cfg.mode)
 
-    if (!cfg.splitOversized && cfg.packSpans) {
-      // single scan, single shuffle: whole doc through the kernel. The
-      // span array crosses the exchange PACKED into one binary blob
-      // (SpanCodec): UnsafeRow's ~48 fixed bytes per span struct are a
-      // large share of this string-heavy shuffle, and shuffle bytes ride
-      // the one shared DRAM bus while pack/unpack CPU scales with cores —
-      // measured shuffle-stage wall -26% at 16 cores, -3% at 4
-      // (BASELINE.md). Exact round-trip is property-tested; extraction
-      // equality vs the row path is pinned in PipelineSpec.
-      docs.map(d => (d.doc_id, SpanCodec.pack(d.spans)))
-        .repartition(cfg.numPartitions, hash($"_1") + lit(cfg.salt))
-        .as[(String, Array[Byte])]
-        .mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          it.map { case (id, blob) =>
-            Extract.extractDoc(graft.model.Doc(id, SpanCodec.unpack(blob)), opts)
-              .copy(partition_id = pid)
-          }
-        }
-    } else if (!cfg.splitOversized) {
-      // row-form twin of the packed path (A/B baseline)
-      docs.repartition(cfg.numPartitions, hash($"doc_id") + lit(cfg.salt))
-        .as[Doc]
-        .mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          it.map(d => Extract.extractDoc(d, opts).copy(partition_id = pid))
-        }
-    } else {
-      val salted = docs.repartition(cfg.numPartitions,
-        hash($"doc_id") + lit(cfg.salt))
-        .as[Doc]
-      val threshold = cfg.oversizedSpanThreshold
-      val small = salted.filter(d => d.spans == null || d.spans.size <= threshold)
-      val big = salted.filter(d => d.spans != null && d.spans.size > threshold)
-
-      // fast path: whole doc through the kernel, no further shuffle
-      val smallResults = small.mapPartitions { it =>
+    // single scan, single shuffle: whole doc through the kernel. The
+    // span array crosses the exchange PACKED into one binary blob
+    // (SpanCodec): UnsafeRow's ~48 fixed bytes per span struct are a
+    // large share of this string-heavy shuffle, and shuffle bytes ride
+    // the one shared DRAM bus while pack/unpack CPU scales with cores —
+    // measured shuffle-stage wall -26% at 16 cores, -3% at 4
+    // (BASELINE.md). Exact round-trip is property-tested; equality with
+    // the direct kernel is pinned in PipelineSpec.
+    docs.map(d => (d.doc_id, SpanCodec.pack(d.spans)))
+      .repartition(cfg.numPartitions, hash($"_1") + lit(cfg.salt))
+      .as[(String, Array[Byte])]
+      .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
-        it.map(d => Extract.extractDoc(d, opts).copy(partition_id = pid))
+        it.map { case (id, blob) =>
+          Extract.extractDoc(graft.model.Doc(id, SpanCodec.unpack(blob)), opts)
+            .copy(partition_id = pid)
+        }
       }
-
-      // skew path: page-aligned chunking -> parallel extraction -> keyed
-      // rebuild; the oversized subset is tiny, so fewer partitions
-      val pagesPerChunk = cfg.pagesPerChunk
-      val bigParts = math.max(8, cfg.numPartitions / 8)
-      val bigResults = big
-        .flatMap(d => chunkDoc(d, pagesPerChunk))
-        .repartition(bigParts,
-          hash($"doc_id", $"chunk_idx") + lit(cfg.salt)) // full-range: see above
-        .as[Chunk]
-        .map { c =>
-          val r = Extract.extractDoc(Doc(c.doc_id, c.spans), opts)
-          (c.doc_id, c.chunk_idx, r)
-        }
-        .groupByKey(_._1)
-        .mapGroups { (id, it) =>
-          reassemble(id, it.map(t => (t._2, t._3)).toSeq)
-        }
-
-      smallResults.union(bigResults)
-    }
   }
 
   /** Production span dump: results exploded to one row per span with

@@ -16,7 +16,8 @@ import graft.model.Span
   * scaling (the 4→16 pair in BASELINE.md).
   *
   * Layout: varint span count, then per span a kind token (dictionary byte
-  * for the input kinds "text"/"media", inline string otherwise), the text
+  * for the input kinds "text"/"media", an inline marker byte plus the
+  * string otherwise; unpack rejects any other byte), the text
   * and media_ref as nullable strings (varint(len+1), 0 = null), and the
   * offset as a zigzag varint. Exact round-trip including null fields and
   * supplementary-plane text (property-tested); `null` span arrays encode
@@ -119,11 +120,11 @@ object SpanCodec {
     out.sizeHint(count)
     var i = 0
     while (i < count) {
-      val kind = nextByte() & 0xff
-      val k = kind match {
-        case KindText  => "text"
-        case KindMedia => "media"
-        case _         => nullable()
+      val k = nextByte() & 0xff match {
+        case KindText   => "text"
+        case KindMedia  => "media"
+        case KindInline => nullable()
+        case other      => fail(s"unknown span kind byte $other")
       }
       val text = nullable()
       val ref = nullable()

@@ -2,13 +2,12 @@ package graft.pipeline
 
 import graft.corpus.Synth
 import graft.kernel.Extract
-import graft.model.{Doc, DocResult, Span}
+import graft.model.{DocResult, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed-correctness properties (SURVEY.md §5): extraction is
-  * partitioning-invariant, the skew (chunking) path is equivalent to the
-  * single-pass kernel, salting never loses or duplicates docs, and
-  * checkpoint resume ≡ cold run. */
+  * partitioning-invariant and equal to the direct kernel, salting never
+  * loses or duplicates docs, and checkpoint resume ≡ cold run. */
 class PipelineSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -52,15 +51,26 @@ class PipelineSpec extends AnyFunSuite {
       val s = Vector(Span("text", "t", "", off))
       assert(SpanCodec.unpack(SpanCodec.pack(s)) == s)
     }
+    // corrupt blobs fail loudly instead of decoding to other spans: every
+    // kind byte past the three the encoder writes, a truncated blob, and a
+    // string length running past the end
+    val good = SpanCodec.pack(Vector(Span("text", "abc", "", 0)))
+    for (kind <- 3 to 255) {
+      val bad = good.clone(); bad(1) = kind.toByte
+      val e = intercept[IllegalArgumentException](SpanCodec.unpack(bad))
+      assert(e.getMessage.contains("unknown span kind"), e.getMessage)
+    }
+    intercept[IllegalArgumentException](SpanCodec.unpack(good.dropRight(1)))
+    val overrun = good.clone(); overrun(2) = 100.toByte
+    intercept[IllegalArgumentException](SpanCodec.unpack(overrun))
   }
 
-  test("packed-span shuffle path ≡ row-form path on the synthetic corpus") {
+  test("packed-span shuffle path ≡ direct kernel on the synthetic corpus") {
     val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 13, parallelism = 4).cache()
+    val direct = docs.collect().map(d => Extract.extractDoc(d)).toSeq
     val packed = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 5, packSpans = true)).collect().toSeq
-    val row = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 5, packSpans = false)).collect().toSeq
-    assert(canon(packed) == canon(row))
+      ExtractionPipeline.Config(numPartitions = 5)).collect().toSeq
+    assert(canon(packed) == canon(direct))
     assert(packed.size == 200)
     docs.unpersist()
   }
@@ -85,32 +95,6 @@ class PipelineSpec extends AnyFunSuite {
     // enough to be deterministic-stable yet catch any collapse/hot bin
     assert(loads.values.forall(n => n > 85 && n < 171),
       s"partition loads must be near-uniform: $loads")
-  }
-
-  test("chunked (skew) path equals the single-pass kernel") {
-    import spark.implicits._
-    // force many docs down the chunk path with a tiny threshold
-    val docs = ExtractionPipeline.synthDocs(spark, 60, seed = 99, parallelism = 4).cache()
-    val direct = docs.collect().map(d => Extract.extractDoc(d)).toSeq
-    val piped = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 5, splitOversized = true,
-        oversizedSpanThreshold = 3, pagesPerChunk = 2)).collect().toSeq
-    assert(canon(piped) == canon(direct))
-    docs.unpersist()
-  }
-
-  test("chunkDoc covers all spans exactly once, page-aligned") {
-    val doc = Synth.docFor(1, 42) // arbitrary
-    val big = Doc("big", (0 until 37).flatMap { p =>
-      Seq(Span("text", s"# page $p", "", p * 2),
-        Span("media", "", s"synth://img/10,10,200,200", p * 2 + 1))
-    })
-    val chunks = ExtractionPipeline.chunkDoc(big, 4)
-    assert(chunks.flatMap(_.spans).sortBy(_.offset) == big.spans.sortBy(_.offset))
-    // every chunk starts with a text span (page boundary)
-    assert(chunks.forall(_.spans.head.kind == "text"))
-    assert(chunks.map(_.chunk_idx) == chunks.indices)
-    assert(ExtractionPipeline.chunkDoc(doc, 1000).size == 1)
   }
 
   test("partition metrics sum to corpus totals") {
@@ -158,6 +142,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(canon(Snapshot.readAt(spark, dir, log.last._1).collect().toSeq) == cold)
     assert(log.flatMap(_._2).map(_.n_docs).sum == 100)
     docs.unpersist()
+  }
+
+  test("markdown sink writes a doc_id header, then one line per span") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-md").toString
+    val spans = Seq(Span("Title", "Report", "", 0),
+      Span("Picture", "", "synth://img/1,2,3,4", 1), Span("Text", "body", "", 2))
+    graft.sources.DocSources.writeMarkdown(
+      Seq(DocResult("doc-7", spans, success = true, "", 3, 1, 0, 0L)).toDS(), dir)
+    val lines = spark.read.text(dir).as[String].collect().toSeq
+    assert(lines == Seq("doc-7", "Report", "![](synth://img/1,2,3,4)", "body"))
   }
 
   test("partition probe returns a best config (A9)") {
