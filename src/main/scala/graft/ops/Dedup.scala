@@ -11,13 +11,11 @@ import org.apache.spark.sql.functions._
   *    (hash, id) pairs only — never the text);
   *  - n-gram Jaccard joins on *shingle* (the classic candidate-pair
   *    generator); common-shingle counts are map-side combinable;
-  *  - MinHash signatures compress each doc to k longs before any join;
-  *    LSH bands turn O(n²) similarity into equi-joins on band keys;
-  *  - SimHash reduces a doc to one 64-bit key; near-dup candidates come
-  *    from banded equi-joins on 16-bit sub-keys (Hamming ≤ 3 ⇒ some band
-  *    exact-matches by pigeonhole);
-  *  - embedding near-dup broadcast-joins a small query side or
-  *    block-joins within LSH buckets at scale.
+  *  - MinHash (d4), SimHash (d6) and embedding (d5) near-dup candidates
+  *    all come from ONE banded self-join, [[bandedPairs]], on band keys
+  *    (md5 of signature slices; 15-bit SimHash slices — Hamming ≤ 3 ⇒
+  *    some band exact-matches by pigeonhole; hyperplane-sign buckets), so
+  *    O(n²) similarity becomes equi-joins that emit each pair once.
   */
 object Dedup {
 
@@ -127,8 +125,8 @@ object Dedup {
         val a = allRows.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a"), col("shingle"))
         val b = allRows.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b"), col("shingle"))
         // merge self-join: one exchange, reused by both sides, spill-safe
-        // under hot-shingle skew (see lshNearDupPairs — a broadcast side
-        // would re-run the shingle UDF)
+        // under hot-shingle skew (see bandedPairs — a broadcast side would
+        // re-run the shingle UDF)
         a.join(b.hint("merge"), Seq("shingle"))
           .filter(col("doc_a") < col("doc_b"))
           .select("doc_a", "n_a", "doc_b", "n_b")
@@ -263,34 +261,68 @@ object Dedup {
           min(col("__h1") + lit(i.toLong) * col("__h2")).as(f"mh$i%02d")): _*)
   }
 
-  /** Banded LSH keys for a signature table: one row per (doc, band) with
-    * the md5 band key and the full signature array riding along —
-    * `posexplode` over the band-key array, NOT a union of per-band selects:
-    * union branches are independent subtrees, so the union form re-executes
-    * the whole upstream (the signature aggregation) once per band. Shared
-    * by the batch pair generator and the incremental signature store. */
-  def bandedSignatureKeys(signatures: DataFrame, k: Int = 16,
-                          bands: Int = 4): DataFrame = {
+  private def signatureArray(k: Int): Column =
+    array((0 until k).map(i => col(f"mh$i%02d")): _*)
+
+  /** The MinHash band keys of a signature row: band b is the md5 of the
+    * comma-joined signature slice [b·k/bands, (b+1)·k/bands). */
+  private def signatureBandKeys(k: Int, bands: Int): Column = {
     val rowsPerBand = k / bands
-    val sigCols = (0 until k).map(i => col(f"mh$i%02d"))
-    val bandKeys = (0 until bands).map { b =>
-      md5(concat_ws(",",
-        (0 until rowsPerBand).map(r => sigCols(b * rowsPerBand + r)): _*).cast("binary"))
-    }
-    signatures
-      .select(col("doc_id"), array(sigCols: _*).as("sig"),
-        posexplode(array(bandKeys: _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "key")
+    array((0 until bands).map { b =>
+      md5(concat_ws(",", (0 until rowsPerBand).map(r =>
+        col(f"mh${b * rowsPerBand + r}%02d")): _*).cast("binary"))
+    }: _*)
   }
 
-  /** Similarity gate + dedup over (doc_a, doc_b, sig_a, sig_b) candidate
-    * rows (doc_a < doc_b, possibly repeated across bands): estimated
-    * similarity = fraction of agreeing signature positions. The estimate is
-    * computed BEFORE the distinct — it is deterministic per pair, so
-    * recomputing it for a multi-band collision is free, while deduping
-    * afterwards shuffles (doc_a, doc_b, est) instead of two full k-long
-    * signature arrays per candidate. */
+  /** Banded LSH keys for a signature table: one row per (doc, band) with
+    * the md5 band key and the full signature array riding along — the
+    * incremental signature store's format. */
+  def bandedSignatureKeys(signatures: DataFrame, k: Int = 16,
+                          bands: Int = 4): DataFrame =
+    signatures.select(col("doc_id"), signatureArray(k).as("sig"),
+      posexplode(signatureBandKeys(k, bands)).as(Seq("band", "key")))
+
+  /** Candidate pairs of rows whose band keys agree in at least one band —
+    * the one banded self-join behind d4, d5 and d6. `keys` is the row's
+    * band-key array (evaluated on `rows`). Output: `<id>_a`, `<id>_b` with
+    * `<id>_a < <id>_b`, and each `payload` column as `<p>_a`, `<p>_b`.
+    *
+    * Each pair comes out EXACTLY ONCE, with no `distinct`: every row carries
+    * its whole key array through the join, and a candidate is kept only in
+    * the lowest band whose keys agree. A pair that collides in several
+    * bands is thus never materialized more than once, and no shuffle on the
+    * pair ids follows the join.
+    *
+    * `posexplode` over the key array, not a union of per-band selects:
+    * union branches are independent subtrees, so the union form re-executes
+    * the whole upstream (scan, kernel, signature aggregation) once per band.
+    *
+    * MERGE hint on the self-join: without it the planner broadcasts one
+    * side, and a BroadcastExchange can never reuse the other side's
+    * shuffle — so the entire upstream pipeline executes twice, once per
+    * join side. With both sides shuffled on (band, key) the two exchanges
+    * canonicalize equal and exchange reuse materializes the pipeline ONCE;
+    * at corpus scale a broadcast of the banded corpus is impossible anyway.
+    * Sort-merge over shuffled-hash deliberately: measured equal-or-faster
+    * here, and SMJ spills gracefully where a skewed hot band key would OOM
+    * a shuffled-hash build side. */
+  private def bandedPairs(rows: DataFrame, id: String, keys: Column,
+                          payload: String*): DataFrame = {
+    val cols = id +: payload
+    val banded = rows.select(cols.map(col) :+ keys.as("keys"): _*)
+      .select(col("*"), posexplode(col("keys")).as(Seq("band", "key")))
+    def side(s: String) = banded.select(col("band") +: col("key") +:
+      (cols :+ "keys").map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b").hint("merge"), Seq("band", "key"))
+      .filter(col(s"${id}_a") < col(s"${id}_b") &&
+        array_position(zip_with(col("keys_a"), col("keys_b"), _ === _), true) ===
+          col("band") + 1)
+      .select(cols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+  }
+
+  /** Similarity gate over (doc_a, doc_b, sig_a, sig_b) candidate rows
+    * (doc_a < doc_b): estimated similarity = fraction of agreeing
+    * signature positions. */
   def pairsFromCandidates(candidates: DataFrame, k: Int = 16,
                           minEstJaccard: Double = 0.5): DataFrame =
     candidates
@@ -299,32 +331,16 @@ object Dedup {
           (b: Column) => b)).cast("double") / lit(k), 6))
       .filter(col("est_jaccard") >= minEstJaccard)
       .select("doc_a", "doc_b", "est_jaccard")
-      .distinct()
 
   /** LSH candidate pairs from banded MinHash signatures: `bands` bands of
     * `k/bands` rows; docs sharing any band key become candidates. */
   def lshNearDupPairs(signatures: DataFrame, k: Int = 16, bands: Int = 4,
-                      minEstJaccard: Double = 0.5): DataFrame = {
-    val banded = bandedSignatureKeys(signatures, k, bands)
-    val a = banded.select(col("band"), col("key"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val b = banded.select(col("band"), col("key"), col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    // MERGE hint on the self-join: without it the planner broadcasts
-    // one side, and a BroadcastExchange can never reuse the other side's
-    // shuffle — so the ENTIRE upstream pipeline (scan → shingle UDF →
-    // minhash aggregation → banding) executes twice, once per join side
-    // (measured: the duplicated subtree was the whole d4 plan). With both
-    // sides shuffled on (band, key) the two exchanges canonicalize equal
-    // and exchange reuse materializes the pipeline ONCE (guide §2.4/§3.1);
-    // at corpus scale a broadcast of the banded corpus is impossible
-    // anyway, so the shuffled self-join is also the honest 100-TB shape.
-    // Sort-merge over shuffled-hash deliberately (guide §3.1): measured
-    // equal-or-faster here, and SMJ spills gracefully where a skewed hot
-    // band key would OOM a shuffled-hash build side.
+                      minEstJaccard: Double = 0.5): DataFrame =
     pairsFromCandidates(
-      a.join(b.hint("merge"), Seq("band", "key"))
-        .filter(col("doc_a") < col("doc_b")),
+      bandedPairs(signatures.withColumnRenamed("doc_id", "doc")
+        .withColumn("sig", signatureArray(k)),
+        "doc", signatureBandKeys(k, bands), "sig"),
       k, minEstJaccard)
-  }
 
   /** 60-bit SimHash over whitespace tokens (Charikar '02): per-bit majority
     * vote of token hashes. Token hash = first 15 hex chars of md5 (60 bits)
@@ -367,23 +383,9 @@ object Dedup {
       .map { case (id, text) =>
         (id, simhash60(Option(text).getOrElse("").toLowerCase
           .split("\\s+").toSeq.filter(_.nonEmpty)))
-      }.toDF("doc_id", "simhash")
-    // posexplode, not union-of-bands: the union form would re-run the
-    // simhash kernel map once per band (4× the whole scan+hash work)
-    val banded = sims
-      .select(col("doc_id"), col("simhash"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("simhash"), b * 15).bitwiseAND(lit(0x7fffL))): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "key")
-    val a = banded.select(col("band"), col("key"), col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
-    val b2 = banded.select(col("band"), col("key"), col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
-    // merge self-join so both sides reuse ONE exchange (spill-safe; see
-    // lshNearDupPairs) — a broadcast side would re-run the simhash kernel
-    a.join(b2.hint("merge"), Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "sh_a", "sh_b")
-      .distinct()
+      }.toDF("doc", "sh")
+    bandedPairs(sims, "doc", array((0 until 4).map(b =>
+      shiftright(col("sh"), b * 15).bitwiseAND(lit(0x7fffL))): _*), "sh")
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
@@ -589,37 +591,15 @@ object Dedup {
                               dim: Int = 64,
                               seed: Long = graft.corpus.Synth.DefaultSeed): DataFrame = {
     val planes = Similarity.hyperplanes(bands * bitsPerBand, dim, seed)
-    val bandKeys = (0 until bands).map { b =>
-      Similarity.lshBucket(col("embedding"),
-        planes.slice(b * bitsPerBand, (b + 1) * bitsPerBand))
-    }
-    // posexplode, not union-of-bands: union branches re-scan the embedding
-    // table and recompute every hyperplane projection once per band
-    val banded = embeddings
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normCol(col("embedding")).as("nrm"),
-        posexplode(array(bandKeys: _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "key")
-    val a = banded.select(col("band"), col("key"), col("vec_id").as("id_a"),
-      col("embedding").as("e_a"), col("nrm").as("n_a"))
-    val b2 = banded.select(col("band"), col("key"), col("vec_id").as("id_b"),
-      col("embedding").as("e_b"), col("nrm").as("n_b"))
-    // cosine BEFORE the distinct: the exact dot is a cheap codegen'd loop,
-    // so recomputing it for a pair that collides in several bands costs
-    // nothing, while deduping afterwards shuffles only (id_a, id_b) — a
-    // distinct over the raw candidates would shuffle both full embedding
-    // arrays per pair (~0.5 KB/pair; measured the dominant d5 cost at the
-    // 10x corpus)
-    // merge self-join so both sides reuse ONE exchange (spill-safe; see
-    // lshNearDupPairs) — a broadcast side would recompute every projection
-    a.join(b2.hint("merge"), Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+    val bandKeys = array((0 until bands).map { b =>
+      Similarity.lshBucket(col("e"), planes.slice(b * bitsPerBand, (b + 1) * bitsPerBand))
+    }: _*)
+    bandedPairs(embeddings.select(col("vec_id").as("id"), col("embedding").as("e"),
+      Similarity.normCol(col("embedding")).as("n")), "id", bandKeys, "e", "n")
       .withColumn("cosine",
         graft.functions.VecMath.vecDot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")))
       .filter(col("cosine") >= minCosine)
       .select("id_a", "id_b")
-      .distinct()
   }
 
   /** Embedding cosine near-duplicates, brute force: all pairs with cosine ≥

@@ -243,8 +243,11 @@ object IncrementalDedup {
         .filter(col("id_n") < col("doc_b"))
         .select(col("id_n").as("doc_a"), col("doc_b"),
           col("sig_n").as("sig_a"), col("sig_b"))
+      // distinct: a candidate repeats once per agreeing band, and once per
+      // copy of a store row — a crash inside compactStore leaves duplicated
+      // store rows (see its invariant 1)
       val pairs = Dedup.pairsFromCandidates(cross.unionByName(inDrop),
-        k, minEstJaccard)
+        k, minEstJaccard).distinct()
       // pairs first, then the store commit: a replay after a partial
       // failure rewrites both partitions idempotently
       pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
@@ -270,10 +273,10 @@ object IncrementalDedup {
     * Crash-safe by ADD-THEN-DELETE, with the invariants doing the work:
     *  1. the merged base is written (keyed-deduplicated on (doc_id, band))
     *     BEFORE any source directory is deleted. A crash in between
-    *     leaves the store with duplicated rows — harmless, because every
-    *     consumer joins candidates through `pairsFromCandidates`, whose
-    *     trailing `distinct()` absorbs duplicate candidates; no window
-    *     ever exists where committed signatures are missing.
+    *     leaves the store with duplicated rows — harmless, because
+    *     [[processBatch]] applies a `distinct()` to its scored pairs,
+    *     which absorbs the duplicate candidates; no window ever exists
+    *     where committed signatures are missing.
     *  2. re-running `compactStore` is idempotent: if the target base
     *     exists WITH its `_SUCCESS` job-commit marker it skips the write
     *     and only finishes the deletions — exactly the recovery a crashed

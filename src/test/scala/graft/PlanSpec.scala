@@ -86,12 +86,17 @@ class PlanSpec extends AnyFunSuite {
       || p.contains("l_returnflag"), p.take(900))
   }
 
-  /** Every exchange whose output already carries BOTH pair ids is the
-    * pair-dedup shuffle — it must move only scalars. Shuffling the full
-    * embedding/signature arrays per candidate pair was the dominant d5
-    * cost at the 10x corpus (~0.5 KB/pair). */
-  private def pairExchangesCarryNoArrays(name: String, idA: String, idB: String): Unit = {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+  /** The banded pair operators emit each pair exactly once from the one
+    * (band, key) self-join, so nothing downstream of that join may shuffle
+    * or aggregate on the pair ids (the trailing `distinct` shuffle is gone),
+    * and no exchange downstream of it may carry an array column: shuffling
+    * the full embedding/signature arrays per candidate pair was the
+    * dominant d5 cost at the 10x corpus (~0.5 KB/pair). */
+  private def noPairShuffleAfterBandJoin(name: String, idA: String, idB: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     // AQE wraps the tree in AdaptiveSparkPlanExec whose children are not
     // traversable pre-execution — inspect the static physical plan instead
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -99,25 +104,48 @@ class PlanSpec extends AnyFunSuite {
     val plan =
       try SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
       finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    val pairExchanges = plan.collect {
-      case e: ShuffleExchangeLike
-        if e.output.exists(_.name == idA) && e.output.exists(_.name == idB) => e
+    val bandJoins = plan.collect {
+      case j: SortMergeJoinExec
+        if j.leftKeys.flatMap(_.references.map(_.name)) == Seq("band", "key") => j
     }
-    assert(pairExchanges.nonEmpty, s"$name: expected a pair-dedup exchange")
-    pairExchanges.foreach { e =>
-      val arrays = e.output.filter(
-        _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      assert(arrays.isEmpty,
-        s"$name pair-dedup exchange must not shuffle arrays, found: " +
-          arrays.map(_.name).mkString(", "))
+    assert(bandJoins.size == 1, s"$name: expected one (band, key) merge join:\n$plan")
+    val join = bandJoins.head
+    // both join sides read ONE (band, key) exchange: the upstream runs once
+    assert(join.collect { case r: ReusedExchangeExec => r }.size == 1,
+      s"$name: the band join's second side must reuse the first's exchange:\n$plan")
+    val downstream = plan.collect {
+      case n if n.find(_ eq join).isDefined && !(n eq join) => n
+    }
+    val pairIds = Set(idA, idB)
+    downstream.foreach {
+      case e: ShuffleExchangeLike =>
+        e.outputPartitioning match {
+          case h: HashPartitioning =>
+            assert(!h.expressions.flatMap(_.references).exists(r => pairIds(r.name)),
+              s"$name: exchange hash-partitions on the pair ids:\n$e")
+          case _ =>
+        }
+        val arrays = e.output.filter(
+          _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+        assert(arrays.isEmpty,
+          s"$name: exchange downstream of the band join shuffles arrays: " +
+            arrays.map(_.name).mkString(", "))
+      case agg: BaseAggregateExec =>
+        assert(!agg.groupingExpressions.flatMap(_.references).exists(r => pairIds(r.name)),
+          s"$name: aggregate groups on the pair ids:\n$agg")
+      case _ =>
     }
   }
 
   test("d5 pair dedup shuffles ids only, never the embedding arrays") {
-    pairExchangesCarryNoArrays("d5_embedding_neardup", "id_a", "id_b")
+    noPairShuffleAfterBandJoin("d5_embedding_neardup", "id_a", "id_b")
   }
 
   test("d4 pair dedup shuffles ids only, never the signature arrays") {
-    pairExchangesCarryNoArrays("d4_lsh_pairs", "doc_a", "doc_b")
+    noPairShuffleAfterBandJoin("d4_lsh_pairs", "doc_a", "doc_b")
+  }
+
+  test("d6 pair dedup needs no shuffle after the band join") {
+    noPairShuffleAfterBandJoin("d6_simhash_pairs", "doc_a", "doc_b")
   }
 }

@@ -69,6 +69,59 @@ class OpsSpec extends AnyFunSuite {
       s"LSH recall too low on ~identical docs: $found/${strong.length}")
   }
 
+  test("d4/d5/d6 emit each banded pair exactly once, equal to join + filter + distinct") {
+    import org.apache.spark.sql.DataFrame
+    import SparkTestSessionImport.spark.implicits._
+    // the reference shape: every band in which a pair collides emits it,
+    // and a trailing distinct removes the repeats
+    def allBands(banded: DataFrame, id: String, payload: String*): DataFrame = {
+      def side(s: String) = banded.select(col("band") +: col("key") +:
+        (id +: payload).map(c => col(c).as(s"${c}_$s")): _*)
+      side("a").join(side("b"), Seq("band", "key"))
+        .filter(col(s"${id}_a") < col(s"${id}_b"))
+    }
+    def check(op: String, got: DataFrame, reference: DataFrame): Unit = {
+      val rows = got.collect().toSeq.map(_.toSeq.toString)
+      assert(rows.nonEmpty, s"$op found no pairs")
+      assert(rows.size == rows.distinct.size, s"$op emitted a pair twice")
+      assert(rows.sorted == reference.distinct().collect().toSeq.map(_.toSeq.toString).sorted,
+        s"$op differs from join + filter + distinct")
+    }
+    // d4: MinHash md5 band keys
+    val sigs = Dedup.minhashSignatures(docs)
+    val d4Candidates = allBands(Dedup.bandedSignatureKeys(sigs), "doc_id", "sig")
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        col("sig_a"), col("sig_b"))
+    val nPairs = d4Candidates.select("doc_a", "doc_b").distinct().count()
+    assert(d4Candidates.count() > nPairs, "corpus must have multi-band collisions")
+    check("d4", Dedup.lshNearDupPairs(sigs), Dedup.pairsFromCandidates(d4Candidates))
+    // d6: four 15-bit SimHash slices
+    val sims = docs.select(col("doc_id").cast("string"), col("text")).as[(String, String)]
+      .map { case (id, text) =>
+        (id, Dedup.simhash60(Option(text).getOrElse("").toLowerCase
+          .split("\\s+").toSeq.filter(_.nonEmpty)))
+      }.toDF("doc", "sh")
+    val simBanded = sims.select(col("doc"), col("sh"), posexplode(array((0 until 4).map(b =>
+      shiftright(col("sh"), b * 15).bitwiseAND(lit(0x7fffL))): _*)).as(Seq("band", "key")))
+    check("d6", Dedup.simhashPairs(docs, maxHamming = 6),
+      allBands(simBanded, "doc", "sh")
+        .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+        .filter(col("hamming") <= 6)
+        .select(col("doc_a"), col("doc_b"), col("hamming")))
+    // d5: hyperplane-sign buckets, 8 bands × 4 bits (the d5 query's shape)
+    val planes = Similarity.hyperplanes(32, 64, graft.corpus.Synth.DefaultSeed)
+    val embBanded = emb.select(col("vec_id").as("id"), col("embedding").as("e"),
+      Similarity.normCol(col("embedding")).as("n"),
+      posexplode(array((0 until 8).map(b =>
+        Similarity.lshBucket(col("embedding"), planes.slice(b * 4, b * 4 + 4))): _*))
+        .as(Seq("band", "key")))
+    check("d5", Dedup.embeddingNearDupsBanded(emb, minCosine = 0.45, bitsPerBand = 4),
+      allBands(embBanded, "id", "e", "n")
+        .filter(graft.functions.VecMath.vecDot(col("e_a"), col("e_b")) /
+          (col("n_a") * col("n_b")) >= 0.45)
+        .select("id_a", "id_b"))
+  }
+
   test("exact dedup keeps one keeper per hash and conserves doc count") {
     val d = Dedup.exactDedup(docs).collect()
     assert(d.map(_.getAs[Long]("n_docs")).sum == docs.count())

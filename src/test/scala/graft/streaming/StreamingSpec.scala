@@ -207,6 +207,20 @@ class StreamingSpec extends AnyFunSuite {
     // idempotent: a second run is a no-op
     IncrementalDedup.compactStore(spark, store, throughBatch = 2)
     assert(dirIds == Set(-3L))
+    // a drop processed while an add-phase crash's leftover copy is still
+    // in the store meets every stored row twice (and a near-copy collides
+    // in several bands): its pairs must still come out once each
+    cp_r(new java.io.File(s"$store/batch=-3"), new java.io.File(s"$store/batch=0"))
+    docs.filter(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" appended")).as("text"))
+      .write.mode("append").parquet(in)
+    IncrementalDedup.run(spark, in, store, pairs, cp).awaitTermination()
+    val copyPairs = spark.read.parquet(s"$pairs/batch=3").select("doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(copyPairs.exists(_._2 >= 1000000L), "near-copies must pair with stored docs")
+    assert(copyPairs.size == copyPairs.distinct.size,
+      "duplicated store rows must not duplicate a drop's pairs")
   }
 
   test("incremental cluster maintenance: N drops ≡ batch d7, split-invariant, replay-safe, compactable") {
