@@ -64,6 +64,23 @@ object SparkEntry {
     q
   }
 
+  /** d8's child session for the pair build and the per-drop updates: AQE
+    * off and 8 shuffle partitions on this session only, so the caller's
+    * conf is never touched. Each update is ~10 fixed-shape micro-stages over an
+    * already-tiny pair delta — nothing to adapt, while AQE's
+    * per-query-stage materialize+replan barrier costs ~0.2-0.5 s × every
+    * boundary (the same argument as the scaling workers, Bench.session);
+    * without AQE's coalescing, the micro-shuffles are sized to the delta
+    * (a handful of tasks), not the session-wide analytics default. A real
+    * nightly drop is one update over millions of pairs, where AQE earns
+    * its barriers. */
+  private def d8UpdateSession(s: SparkSession): SparkSession = {
+    val ds = s.newSession()
+    ds.conf.set("spark.sql.adaptive.enabled", "false")
+    ds.conf.set("spark.sql.shuffle.partitions", "8")
+    ds
+  }
+
   /** Clustering tier threshold for the d7/c2 queries: default 2×10⁶ pairs
     * (the operator default); SPARK_GRAFT_D7_LOCAL_MAX overrides for scale
     * batteries (=0 forces the distributed adaptive-jump tier — the
@@ -374,7 +391,8 @@ object SparkEntry {
       // local temp store is an artifact of this verification harness;
       // production stores live wherever the stream commits them.
       import graft.streaming.IncrementalClusters
-      val pairs = Dedup.lshNearDupPairs(Dedup.minhashSignatures(spread(t(s, d, "documents"))))
+      val ds = d8UpdateSession(s)
+      val pairs = Dedup.lshNearDupPairs(Dedup.minhashSignatures(spread(t(ds, d, "documents"))))
         .select("doc_a", "doc_b").persist()
       // fresh per-invocation store: a fixed shared path would let two
       // concurrent runs against the same sf dir delete each other's
@@ -391,36 +409,12 @@ object SparkEntry {
         java.nio.file.Files.createTempDirectory(shm, "graft_d8_")
       else java.nio.file.Files.createTempDirectory("graft_d8_")).toString
       d8TempStores.add(dir)
-      // SINGLE-THREADED ASSUMPTION: the conf overrides below are
-      // session-global for the window of the three updates — correct for
-      // the sequential bench driver; a concurrent query sharing this
-      // session would silently run with AQE off and 8 shuffle partitions
-      // during that window (scope via spark.newSession() if that ever
-      // changes).
-      // AQE off around the per-drop updates (restored after): each update
-      // is ~10 fixed-shape micro-stages over an already-tiny pair delta —
-      // nothing to adapt, while AQE's per-query-stage materialize+replan
-      // barrier costs ~0.2-0.5 s × every boundary (the same argument as
-      // the scaling workers, Bench.session). A real nightly drop is one
-      // update over millions of pairs, where AQE earns its barriers.
-      val aqeBefore = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val partsBefore = s.conf.get("spark.sql.shuffle.partitions", "32")
-      try {
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        // without AQE's coalescing, size the micro-shuffles to the delta
-        // (a handful of tasks), not the session-wide analytics default
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        (0 to 2).foreach { i =>
-          IncrementalClusters.update(pairs.filter(pmod(col("doc_b"), lit(3)) === i),
-            dir, i, localSolveMaxPairs = d7LocalMax)
-        }
-      } finally {
-        // unpersist INSIDE the finally: a failed update must not leak the
-        // persisted pair frame in the cache alongside the restored confs
-        pairs.unpersist()
-        s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        s.conf.set("spark.sql.shuffle.partitions", partsBefore)
-      }
+      // unpersist in the finally: a failed update must not leak the
+      // persisted pair frame in the cache
+      try (0 to 2).foreach { i =>
+        IncrementalClusters.update(pairs.filter(pmod(col("doc_b"), lit(3)) === i),
+          dir, i, localSolveMaxPairs = d7LocalMax)
+      } finally pairs.unpersist(): Unit
       IncrementalClusters.currentLabels(s, dir).orderBy("doc_id")
     }),
     "c1_curation" -> ((s, d) => {

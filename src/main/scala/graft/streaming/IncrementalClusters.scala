@@ -24,9 +24,11 @@ import org.apache.spark.sql.functions._
   *    a smaller-rooted one), mapped to the surviving root. The merge map
   *    is the small side by construction — it grows with cluster MERGES
   *    since the last compaction, not with docs — and rides as a broadcast
-  *    in every resolution join. [[compact]] folds it back into the
-  *    assignments and resets it, the same explicit bounded-small-side
-  *    contract as the broadcast query side in `cosineTopK`.
+  *    in every resolution join ([[resolveLabels]]). [[compact]] folds it
+  *    back into the assignments and resets it, by the batch-store
+  *    protocol described at [[IncrementalDedup.compactBatches]] — the
+  *    same explicit bounded-small-side contract as the broadcast query
+  *    side in `cosineTopK`.
   *
   * Per drop, [[update]] does: (1) look up the drop's pair endpoints in
   * the db-pruned assignment store, (2) resolve stored labels through the
@@ -64,14 +66,6 @@ object IncrementalClusters {
 
   def docBucket(id: Column): Column = pmod(hash(id), lit(DocBuckets))
 
-  /** The store remembers its bucket fan-out in a `_doc_buckets` marker,
-    * written on the first commit and REQUIRED to match on every later one
-    * — the shared [[IncrementalDedup.checkFanoutMarker]] invariant (a
-    * store laid out under a different constant would silently miss rows
-    * in pruned lookups). */
-  private def checkBucketMarker(spark: SparkSession, labelsDir: String): Unit =
-    IncrementalDedup.checkFanoutMarker(spark, labelsDir, "doc_buckets", DocBuckets)
-
   /** Fold one drop's candidate pairs (doc_a, doc_b) into the label store.
     * `localSolveMaxPairs` is the contracted-graph tier threshold passed
     * through to [[Dedup.duplicateClusters]].
@@ -91,7 +85,7 @@ object IncrementalClusters {
     def phase(name: String): Unit = // guide §1.5: label the micro-jobs
       spark.sparkContext.setJobDescription(s"d8 update $batchId: $name")
     IncrementalDedup.withWriterLease(spark, labelsDir) {
-      checkBucketMarker(spark, labelsDir)
+      IncrementalDedup.checkFanoutMarker(spark, labelsDir, "doc_buckets", DocBuckets)
       val p = newPairs.select(col("doc_a"), col("doc_b")).persist()
       var endpoints: DataFrame = null
       var looked: DataFrame = null
@@ -120,17 +114,13 @@ object IncrementalClusters {
         val assigns = prunedAssignments(spark, labelsDir, p, dbs,
           excludeBatch = batchId)
         phase("merge map")
-        val merges = resolvedMerges(spark, labelsDir,
-          p.schema("doc_a").dataType, excludeBatch = Some(batchId))
-        // stored label (null for first-seen docs) resolved through the
-        // merge map to the CURRENT root = the doc's representative
-        looked = endpoints.drop("db")
-          .join(assigns.select(col("doc_id"),
-            col("cluster_id").as("stored")), Seq("doc_id"), "left")
-          .join(broadcast(merges.select(col("old_label").as("stored"),
-            col("new_label"))), Seq("stored"), "left")
-          .select(col("doc_id"), col("stored"),
-            coalesce(col("new_label"), col("stored"), col("doc_id")).as("rep"))
+        // stored label (null for first-seen docs) resolved to the CURRENT
+        // root; the doc's representative is that root, or itself if unseen
+        looked = resolveLabels(spark, labelsDir,
+          endpoints.drop("db").join(assigns, Seq("doc_id"), "left"),
+          col("batch") =!= batchId)
+          .select(col("doc_id"), col("cluster_id").as("stored"),
+            coalesce(col("cluster_id"), col("doc_id")).as("rep"))
           .persist()
         // contract pairs to representative labels; intra-cluster pairs
         // vanish, so the CC input holds only genuinely-bridging edges
@@ -187,103 +177,66 @@ object IncrementalClusters {
   }
 
   /** The current (doc_id, cluster_id) labels: every assignment resolved
-    * through the broadcast merge map. One probe-side broadcast join over
-    * the store — no shuffle; the trailing dropDuplicates (scalar pair
-    * rows only) absorbs the identical duplicate rows a crashed
+    * through the broadcast merge map ([[resolveLabels]]) — no shuffle of
+    * the store for the resolution; the trailing dropDuplicates (scalar
+    * pair rows only) absorbs the identical duplicate rows a crashed
     * [[compact]] add-phase can leave behind. */
-  def currentLabels(spark: SparkSession, labelsDir: String): DataFrame = {
-    val assigns = spark.read.parquet(s"$labelsDir/assign")
-      .select("doc_id", "cluster_id")
-    val merges = resolvedMerges(spark, labelsDir,
-      assigns.schema("doc_id").dataType, excludeBatch = None)
-    assigns
-      .join(broadcast(merges.select(col("old_label").as("cluster_id"),
-        col("new_label"))), Seq("cluster_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("new_label"), col("cluster_id")).as("cluster_id"))
+  def currentLabels(spark: SparkSession, labelsDir: String): DataFrame =
+    resolveLabels(spark, labelsDir,
+      spark.read.parquet(s"$labelsDir/assign").select("doc_id", "cluster_id"),
+      lit(true))
       .dropDuplicates("doc_id", "cluster_id")
-  }
 
-  /** Fold merges with batch ≤ `throughBatch` into the assignment store
-    * (rewritten as one db-partitioned base `assign/batch=-(throughBatch+1)`)
-    * and delete the folded merge directories. Later merge batches remain
-    * applicable untouched: their old_labels were still roots after
-    * `throughBatch`, so folding earlier merges cannot rewrite them.
-    * Crash-safe by the same ADD-THEN-DELETE + `_SUCCESS`-gated recovery
-    * protocol as [[IncrementalDedup.compactStore]]; the crash window can
-    * only duplicate identical label rows (absorbed by `currentLabels`),
-    * never lose or corrupt one. */
-  def compact(spark: SparkSession, labelsDir: String, throughBatch: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    require(throughBatch >= 0, s"throughBatch must be >= 0, got $throughBatch")
-    val root = new Path(labelsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(root, "assign"))) return
-    IncrementalDedup.withWriterLease(spark, labelsDir) {
-      // the base rewrite below recomputes db = docBucket(doc_id) with THIS
-      // binary's constant — under a mismatched marker that would lay out a
-      // base the marker lies about, re-arming the silent mis-pruning
-      // hazard for every later update
-      checkBucketMarker(spark, labelsDir)
-      def dirsOf(sub: String): Map[Long, Path] =
-        IncrementalDedup.batchDirsOf(fs, new Path(root, sub))
-      val targetId = -(throughBatch + 1)
-      IncrementalDedup.requireCoverage(dirsOf("assign").keySet, throughBatch)
-      val assignDirs = dirsOf("assign")
-      val mergeable = assignDirs.keySet
-        .filter(b => b != targetId && (b < 0 || b <= throughBatch))
-      val mergesToFold = dirsOf("merges").keySet.filter(_ <= throughBatch)
-      if (mergeable.isEmpty && mergesToFold.isEmpty) return
-      val targetComplete = assignDirs.contains(targetId) &&
-        fs.exists(new Path(assignDirs(targetId), "_SUCCESS"))
-      if (assignDirs.contains(targetId) && !targetComplete)
-        fs.delete(assignDirs(targetId), true): Unit
-      if (!targetComplete) {
-        val assigns = spark.read.parquet(s"$labelsDir/assign")
-          .filter(col("batch") <= throughBatch)
-          .select("doc_id", "cluster_id")
-        val merges = resolvedMerges(spark, labelsDir,
-          assigns.schema("doc_id").dataType,
-          excludeBatch = None, maxBatch = Some(throughBatch))
-        assigns
-          .join(broadcast(merges.select(col("old_label").as("cluster_id"),
-            col("new_label"))), Seq("cluster_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("new_label"), col("cluster_id")).as("cluster_id"),
-            docBucket(col("doc_id")).as("db"))
+  /** Fold merges with batch ≤ `throughBatch` into the assignment store:
+    * the base `assign/batch=-(throughBatch+1)` holds every folded
+    * assignment resolved through those merges, and the folded merge
+    * directories are deleted — the [[IncrementalDedup.compactBatches]]
+    * protocol. Later merge batches remain applicable untouched: their
+    * old_labels were still roots after `throughBatch`, so folding earlier
+    * merges cannot rewrite them. A crash window can only duplicate
+    * identical label rows (absorbed by `currentLabels`) or leave folded
+    * merges behind (already applied, so applying them again is a no-op),
+    * never lose or corrupt a label. */
+  def compact(spark: SparkSession, labelsDir: String, throughBatch: Long): Unit =
+    IncrementalDedup.compactBatches(spark, labelsDir, s"$labelsDir/assign",
+      Seq(s"$labelsDir/merges"), "doc_buckets", DocBuckets, throughBatch) {
+      (rows, base) =>
+        resolveLabels(spark, labelsDir, rows.select("doc_id", "cluster_id"),
+          col("batch") <= throughBatch)
           .dropDuplicates("doc_id", "cluster_id")
+          .withColumn("db", docBucket(col("doc_id")))
           // cluster by the partition column (same reason as update's
           // assignment write): this is the store's LARGEST write, and an
           // unclustered partitionBy fans out tasks × DocBuckets part files
           .repartition(col("db"))
-          .write.partitionBy("db").mode("overwrite")
-          .parquet(s"$labelsDir/assign/batch=$targetId")
-      }
-      val assignNow = dirsOf("assign")
-      mergeable.foreach(b => assignNow.get(b).foreach(p => fs.delete(p, true): Unit))
-      val mergeNow = dirsOf("merges")
-      mergesToFold.foreach(b => mergeNow.get(b).foreach(p => fs.delete(p, true): Unit))
+          .write.partitionBy("db").mode("overwrite").parquet(base)
     }
-  }
 
   /** The assignment store restricted to previous batches and the given doc
-    * buckets — `db` is a literal isin over a partition column, so only the
-    * matching directories are listed and read (partition pruning,
-    * plan-pinned in StreamingSpec). Empty-with-schema before first commit. */
+    * buckets ([[IncrementalDedup.prunedBatches]]). */
   private[streaming] def prunedAssignments(spark: SparkSession, labelsDir: String,
                                            idTemplate: DataFrame, dbs: Seq[Int],
-                                           excludeBatch: Long): DataFrame = {
-    val store =
-      try spark.read.parquet(s"$labelsDir/assign")
-      catch {
-        case _: AnalysisException => // nothing committed yet
-          idTemplate.select(col("doc_a").as("doc_id"),
-            col("doc_a").as("cluster_id"),
-            lit(0L).as("batch"), lit(0).as("db")).limit(0)
-      }
-    store.filter(col("batch") =!= excludeBatch)
-      .filter(col("db").isin(dbs: _*))
-      .select("doc_id", "cluster_id")
+                                           excludeBatch: Long): DataFrame =
+    IncrementalDedup.prunedBatches(spark, s"$labelsDir/assign", "db", dbs,
+      excludeBatch)(idTemplate.select(col("doc_a").as("doc_id"),
+      col("doc_a").as("cluster_id")).limit(0))
+
+  /** (doc_id, cluster_id) rows with each nullable `cluster_id` resolved
+    * to the CURRENT root: a left join to the path-compressed merge map of
+    * the merge batches `keep` selects, as a broadcast (the assignments
+    * stay the probe side, never shuffled for it), then
+    * `coalesce(new_label, cluster_id)`. The one label resolution of
+    * [[currentLabels]], [[compact]]'s base rewrite and [[update]]'s
+    * endpoint lookup. */
+  private def resolveLabels(spark: SparkSession, labelsDir: String,
+                            labeled: DataFrame, keep: Column): DataFrame = {
+    val merges = resolvedMerges(spark, labelsDir,
+      labeled.schema("cluster_id").dataType, keep)
+    labeled
+      .join(broadcast(merges.withColumnRenamed("old_label", "cluster_id")),
+        Seq("cluster_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("new_label"), col("cluster_id")).as("cluster_id"))
   }
 
   /** The merge map with chains PATH-COMPRESSED on the driver (an old root
@@ -293,16 +246,12 @@ object IncrementalClusters {
     * merge entries accumulate per cluster merge between compactions. */
   private def resolvedMerges(spark: SparkSession, labelsDir: String,
                              idType: org.apache.spark.sql.types.DataType,
-                             excludeBatch: Option[Long],
-                             maxBatch: Option[Long] = None): DataFrame = {
+                             keep: Column): DataFrame = {
     import scala.jdk.CollectionConverters._
     val raw =
-      try {
-        val m = spark.read.parquet(s"$labelsDir/merges")
-        val f1 = excludeBatch.map(b => m.filter(col("batch") =!= b)).getOrElse(m)
-        maxBatch.map(b => f1.filter(col("batch") <= b)).getOrElse(f1)
-          .select("old_label", "new_label").collect()
-      } catch {
+      try spark.read.parquet(s"$labelsDir/merges").filter(keep)
+        .select("old_label", "new_label").collect()
+      catch {
         case _: AnalysisException => Array.empty[org.apache.spark.sql.Row]
       }
     val next = new java.util.HashMap[Any, Any]()

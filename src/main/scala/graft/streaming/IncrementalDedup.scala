@@ -133,9 +133,8 @@ object IncrementalDedup {
     }
   }
 
-  /** `batch=<id>` subdirectories of `dir` — the listing both compaction
-    * protocols (signature store here, label store in
-    * [[IncrementalClusters]]) decide recovery from. */
+  /** `batch=<id>` subdirectories of `dir` — the listing [[compactBatches]]
+    * decides recovery from. */
   private[streaming] def batchDirsOf(fs: org.apache.hadoop.fs.FileSystem,
                                      dir: org.apache.hadoop.fs.Path
                                     ): Map[Long, org.apache.hadoop.fs.Path] =
@@ -155,6 +154,91 @@ object IncrementalDedup {
         s"existing compacted base batch=$b covers through ${-b - 1}, beyond " +
           s"throughBatch=$throughBatch; re-run with throughBatch >= ${-b - 1}")
     }
+
+  /** The batch-store compaction protocol, shared by the signature store
+    * ([[compactStore]]) and the cluster-label store
+    * ([[IncrementalClusters.compact]]). Every `batch=<id>` directory of
+    * `dataDir` with id ≤ `throughBatch` — older compacted bases included —
+    * is folded into ONE base `batch=-(throughBatch+1)`, written by
+    * `writeBase(rows, baseDir)` from the folded batches' rows (the `batch`
+    * column dropped). The folded directories are then deleted, together
+    * with every `batch=<id>` ≤ `throughBatch` under `alsoFolded` — data
+    * the base write consumed, such as the label store's merge map.
+    * Nightly drops otherwise accumulate one directory per micro-batch
+    * forever; at 100 TB that is millions of small files and a per-drop
+    * listing cost that grows without bound.
+    *
+    * Bases use NEGATIVE batch ids: streaming batch ids are ≥ 0, so a base
+    * never collides with a future drop or with a drop's own-batch
+    * exclusion ([[prunedBatches]]), and the id −(k+1) encodes "covers
+    * everything through k", which makes recovery decidable from the
+    * directory listing alone.
+    *
+    * Crash-safe by ADD-THEN-DELETE under the store's writer lease:
+    *  1. the base commits BEFORE any folded directory is deleted. A crash
+    *     in between leaves rows present twice (base + source) or folded
+    *     data still in place — never a window where committed rows are
+    *     missing. Each store's reads absorb the duplicates, and so must
+    *     `writeBase`, which meets them on the re-run.
+    *  2. re-running is idempotent: a base WITH its `_SUCCESS` job-commit
+    *     marker is trusted and only the deletions are finished — exactly
+    *     the recovery a crash in step 1 needs; a marker-less base is a
+    *     crashed partial write and is deleted and rewritten (its sources
+    *     are intact, because deletions only ever follow a committed write).
+    * The store's `_<markerName>` fan-out marker is checked first: the base
+    * write re-lays the bucket directories, and a mismatched-constant
+    * binary would mis-prune every later read. A base that already covers
+    * beyond `throughBatch` is refused ([[requireCoverage]]). Run it
+    * between drops (the store has a single writer by contract). */
+  private[streaming] def compactBatches(spark: SparkSession, storeDir: String,
+                                        dataDir: String, alsoFolded: Seq[String],
+                                        markerName: String, buckets: Int,
+                                        throughBatch: Long)(
+                                        writeBase: (DataFrame, String) => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    require(throughBatch >= 0, s"throughBatch must be >= 0, got $throughBatch")
+    // Hadoop FileSystem, not java.io.File: stores are written through
+    // Spark's Hadoop path layer, so they may live behind any supported
+    // scheme (file:/ URI, hdfs://, s3a://) — a java.io listing would
+    // silently no-op on those and the batch directories would pile up
+    val data = new Path(dataDir)
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(data)) withWriterLease(spark, storeDir) {
+      checkFanoutMarker(spark, storeDir, markerName, buckets)
+      requireCoverage(batchDirsOf(fs, data).keySet, throughBatch)
+      val targetId = -(throughBatch + 1)
+      val folded = (dataDir +: alsoFolded).flatMap(d => batchDirsOf(fs, new Path(d))
+        .collect { case (b, p) if b != targetId && b <= throughBatch => p })
+      if (folded.nonEmpty) {
+        val target = new Path(data, s"batch=$targetId")
+        if (!fs.exists(new Path(target, "_SUCCESS"))) {
+          fs.delete(target, true) // a crashed partial write, if any
+          // plan-time file listing: the base being written is not part of
+          // the read, and no folded dir is touched until the write commits
+          writeBase(spark.read.parquet(dataDir)
+            .filter(col("batch") <= throughBatch) // older bases too: < 0 ≤ through
+            .drop("batch"), target.toString)
+        }
+        folded.foreach(fs.delete(_, true))
+      }
+    }
+  }
+
+  /** The committed rows of the batch store at `dir`, restricted to batches
+    * other than `excludeBatch` (a crashed attempt may have left that
+    * batch's own partition behind) and to the given values of the bucket
+    * partition column `bucketCol`. The bucket filter is a literal `isin`
+    * over a partition column, so the scan lists and reads only the
+    * matching bucket directories (partition pruning; plan-pinned in
+    * StreamingSpec for both stores). `empty` — the payload columns with no
+    * rows — stands in before the first commit. */
+  private[streaming] def prunedBatches(spark: SparkSession, dir: String,
+                                       bucketCol: String, buckets: Seq[Int],
+                                       excludeBatch: Long)(empty: => DataFrame): DataFrame =
+    (try Some(spark.read.parquet(dir)) catch { case _: AnalysisException => None })
+      .fold(empty)(_.filter(col("batch") =!= excludeBatch)
+        .filter(col(bucketCol).isin(buckets: _*))
+        .drop("batch", bucketCol))
 
   /** Start (or resume) incremental dedup: new parquet doc files under
     * `inDir` → near-dup pairs appended under `pairsDir/batch=N` and banded
@@ -245,7 +329,7 @@ object IncrementalDedup {
           col("sig_n").as("sig_a"), col("sig_b"))
       // distinct: a candidate repeats once per agreeing band, and once per
       // copy of a store row — a crash inside compactStore leaves duplicated
-      // store rows (see its invariant 1)
+      // store rows (see compactBatches' invariant 1)
       val pairs = Dedup.pairsFromCandidates(cross.unionByName(inDrop),
         k, minEstJaccard).distinct()
       // pairs first, then the store commit: a replay after a partial
@@ -257,105 +341,30 @@ object IncrementalDedup {
     }
   }
 
-  /** Compact the committed store: merge every batch directory with id ≤
-    * `throughBatch` — plus any older compacted base — into a single
-    * kb-partitioned base directory `batch=-(throughBatch+1)`, then delete
-    * the merged sources. Nightly drops otherwise accumulate one directory
-    * per micro-batch forever; at 100 TB that is millions of small files
-    * and a per-drop listing cost that grows without bound.
-    *
-    * Compacted bases use NEGATIVE batch ids (streaming batch ids are
-    * ≥ 0, so they can never collide with a future drop, and the
-    * `batch =!= currentBatchId` exclusion in [[processBatch]] is
-    * unaffected); the id −(k+1) encodes "covers everything through k",
-    * which makes recovery decidable from the directory listing alone.
-    *
-    * Crash-safe by ADD-THEN-DELETE, with the invariants doing the work:
-    *  1. the merged base is written (keyed-deduplicated on (doc_id, band))
-    *     BEFORE any source directory is deleted. A crash in between
-    *     leaves the store with duplicated rows — harmless, because
-    *     [[processBatch]] applies a `distinct()` to its scored pairs,
-    *     which absorbs the duplicate candidates; no window ever exists
-    *     where committed signatures are missing.
-    *  2. re-running `compactStore` is idempotent: if the target base
-    *     exists WITH its `_SUCCESS` job-commit marker it skips the write
-    *     and only finishes the deletions — exactly the recovery a crashed
-    *     step 2 needs; a marker-less target is a crashed partial write
-    *     and is deleted and rewritten (its sources are still intact,
-    *     because deletions only ever happen after a committed write).
-    * Run it between drops (the store has a single writer by contract —
-    * the AvailableNow runner). */
+  /** Compact the committed signature store: fold the batch directories
+    * with id ≤ `throughBatch` into the kb-partitioned base
+    * `batch=-(throughBatch+1)` by the [[compactBatches]] protocol. The
+    * base is keyed-deduplicated on (doc_id, band); a crash window's
+    * duplicated store rows reach [[processBatch]] as duplicate candidates,
+    * which its `distinct()` absorbs. */
   def compactStore(spark: SparkSession, storeDir: String,
-                   throughBatch: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    require(throughBatch >= 0, s"throughBatch must be >= 0, got $throughBatch")
-    // Hadoop FileSystem, not java.io.File: processBatch writes through
-    // Spark's Hadoop path layer, so the store may live behind any
-    // supported scheme (file:/ URI, hdfs://, s3a://) — a java.io listing
-    // would silently no-op on every one of those and the batch
-    // directories would accumulate forever
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    withWriterLease(spark, storeDir) {
-    // the base rewrite re-reads kb from the store's partition layout, but a
-    // mismatched-constant binary would still mis-prune every LATER drop —
-    // refuse at the first write, compaction included
-    checkFanoutMarker(spark, storeDir, "key_buckets", KeyBuckets)
-    def batchDirs: Map[Long, Path] = batchDirsOf(fs, root)
-    val targetId = -(throughBatch + 1)
-    requireCoverage(batchDirs.keySet, throughBatch)
-    val mergeable = batchDirs.keySet
-      .filter(b => b != targetId && (b < 0 || b <= throughBatch))
-    if (mergeable.isEmpty) return
-    // a target dir WITHOUT the _SUCCESS job-commit marker is a crashed
-    // partial write — trusting it and deleting the sources would lose
-    // data; delete the partial and rewrite instead (sources are still
-    // intact, because deletions only ever follow a committed write)
-    val targetComplete = batchDirs.contains(targetId) &&
-      fs.exists(new Path(batchDirs(targetId), "_SUCCESS"))
-    if (batchDirs.contains(targetId) && !targetComplete)
-      fs.delete(batchDirs(targetId), true): Unit
-    if (!targetComplete) {
-      // plan-time file listing: the base being written below is not part
-      // of the read, and no source dir is touched until the write commits
-      spark.read.parquet(storeDir)
-        .filter(col("batch") <= throughBatch) // negatives included: < 0 ≤ through
-        .drop("batch")
-        .dropDuplicates("doc_id", "band") // absorb a crashed prior add-phase
-        .write.partitionBy("kb")
-        .mode("overwrite").parquet(s"$storeDir/batch=$targetId")
+                   throughBatch: Long): Unit =
+    compactBatches(spark, storeDir, storeDir, Nil, "key_buckets", KeyBuckets,
+      throughBatch) { (rows, base) =>
+      rows.dropDuplicates("doc_id", "band") // absorb a crashed prior add-phase
+        .write.partitionBy("kb").mode("overwrite").parquet(base)
     }
-    val dirs = batchDirs
-    mergeable.foreach(b => dirs.get(b).foreach(p => fs.delete(p, true): Unit))
-    }
-  }
 
   /** The committed banded store restricted to PREVIOUS batches and to the
-    * given key buckets — the `kb` filter is a literal `isin` over a
-    * partition column, so the scan physically reads only the matching
-    * `kb=` directories (partition pruning; pinned by a StreamingSpec plan
-    * assertion). Returns an empty table with the right shape before the
-    * first commit. */
+    * given key buckets ([[prunedBatches]]); in-drop pairs are generated
+    * explicitly. */
   private[streaming] def prunedStore(spark: SparkSession, storeDir: String,
                                      k: Int, kbs: Seq[Int],
-                                     excludeBatch: Long): DataFrame = {
-    val store =
-      try spark.read.parquet(storeDir)
-      catch {
-        case _: AnalysisException => // nothing committed yet
-          spark.range(0).select(
-            col("id").as("doc_id"),
-            array((0 until k).map(_ => col("id")): _*).as("sig"),
-            col("id").cast("int").as("band"),
-            col("id").cast("string").as("key"),
-            col("id").as("batch"),
-            col("id").cast("int").as("kb"))
-      }
-    // a crashed attempt may have left this batch's own store partition
-    // behind; exclude it — in-drop pairs are generated explicitly
-    store.filter(col("batch") =!= excludeBatch)
-      .filter(col("kb").isin(kbs: _*))
-      .drop("batch", "kb")
-  }
+                                     excludeBatch: Long): DataFrame =
+    prunedBatches(spark, storeDir, "kb", kbs, excludeBatch)(
+      spark.range(0).select(
+        col("id").as("doc_id"),
+        array((0 until k).map(_ => col("id")): _*).as("sig"),
+        col("id").cast("int").as("band"),
+        col("id").cast("string").as("key")))
 }

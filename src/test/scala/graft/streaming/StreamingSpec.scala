@@ -11,6 +11,13 @@ class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
+  /** Recursive copy — fakes the directories a crashed writer leaves. */
+  private def cp_r(src: java.io.File, dst: java.io.File): Unit = {
+    if (src.isDirectory) { dst.mkdirs()
+      src.listFiles.foreach(f => cp_r(f, new java.io.File(dst, f.getName))) }
+    else java.nio.file.Files.copy(src.toPath, dst.toPath): Unit
+  }
+
   test("AvailableNow file-stream extraction: incremental, exactly-once, batch-equivalent") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-stream").toString
@@ -185,11 +192,6 @@ class StreamingSpec extends AnyFunSuite {
     // crash recovery: duplicate the base into a fake leftover source dir
     // (the state an add-phase crash leaves), re-compact — the keyed dedup
     // absorbs the duplicates and the leftover is deleted
-    def cp_r(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) { dst.mkdirs()
-        src.listFiles.foreach(f => cp_r(f, new java.io.File(dst, f.getName))) }
-      else java.nio.file.Files.copy(src.toPath, dst.toPath): Unit
-    }
     cp_r(new java.io.File(s"$store/batch=-2"), new java.io.File(s"$store/batch=0"))
     val nRows = spark.read.parquet(store).drop("batch")
       .dropDuplicates("doc_id", "band").count()
@@ -292,6 +294,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(planStr.matches("(?s).*PartitionFilters:\\s*\\[[^\\]]*db[^\\]]*\\].*"),
       s"db must be a partition (pruning) filter:\n$planStr")
 
+    // a crashed PARTIAL base (no _SUCCESS job-commit marker) must be
+    // rewritten, never trusted — trusting it would delete the sources
+    val partial = new java.io.File(s"$l3/assign/batch=-3/db=0")
+    partial.mkdirs()
+    java.nio.file.Files.writeString(
+      new java.io.File(partial, "part-junk.parquet").toPath, "not parquet")
     // compaction folds merges into a single assignment base; labels unchanged
     IncrementalClusters.compact(spark, l3, throughBatch = 2)
     def subdirs(p: String) = Option(new java.io.File(p).listFiles)
@@ -306,6 +314,22 @@ class StreamingSpec extends AnyFunSuite {
     // full pair set as one more drop — still a no-op on labels
     IncrementalClusters.update(allPairs, l3, 3)
     assert(labelsOf(l3) == batchLabels)
+    // a crash between the base commit and the deletions leaves folded merge
+    // dirs behind (lplan holds the merge 10 → 1): they are already applied,
+    // so labels hold, and a re-run finishes the deletions
+    val lplanLabels = Map(1L -> 1L, 10L -> 1L, 11L -> 1L)
+    val mergesKept = new java.io.File(s"$base/lplan-merges")
+    cp_r(new java.io.File(s"$lplan/merges"), mergesKept)
+    IncrementalClusters.compact(spark, lplan, throughBatch = 1)
+    assert(subdirs(s"$lplan/assign") == Set("batch=-2"), subdirs(s"$lplan/assign").toString)
+    assert(subdirs(s"$lplan/merges").isEmpty, "folded merge dirs must be deleted")
+    cp_r(mergesKept, new java.io.File(s"$lplan/merges"))
+    assert(subdirs(s"$lplan/merges").contains("batch=1"))
+    assert(labelsOf(lplan) == lplanLabels, "leftover folded merges must not change labels")
+    IncrementalClusters.compact(spark, lplan, throughBatch = 1)
+    assert(subdirs(s"$lplan/merges").isEmpty, "re-run must delete leftover folded merges")
+    assert(subdirs(s"$lplan/assign") == Set("batch=-2"), subdirs(s"$lplan/assign").toString)
+    assert(labelsOf(lplan) == lplanLabels)
     allPairs.unpersist(): Unit
   }
 
@@ -427,6 +451,14 @@ class StreamingSpec extends AnyFunSuite {
     // and the refusal released the lease (a retry with a wide-enough
     // throughBatch is not blocked)
     IncrementalDedup.withWriterLease(spark, store) { () }
+    // the label store shares the refusal (and the lease release)
+    val labels = s"$base/labels"
+    assert(new java.io.File(s"$labels/assign/batch=-3").mkdirs())
+    val e2 = intercept[IllegalArgumentException] {
+      IncrementalClusters.compact(spark, labels, throughBatch = 1)
+    }
+    assert(e2.getMessage.contains("covers through 2"), e2.getMessage)
+    IncrementalDedup.withWriterLease(spark, labels) { () }
   }
 
   test("mapGroupsWithState running totals accumulate per source") {
