@@ -94,16 +94,11 @@ object Main {
     a.cmd match {
       case "extract" =>
         val out = a.req("out")
-        val results = ExtractionPipeline.extract(DocSources.readDocs(spark, a.req("in")), cfg)
-        DocSources.writeResults(results, out)
-        // re-read for metrics (results would otherwise recompute); the
-        // partition dir column comes back as STRING, so cast it
-        ExtractionPipeline.partitionMetrics(
-            spark.read.parquet(out).selectExpr("doc_id", "spans",
-              "cast(success as boolean) as success",
-              "failure_code", "n_spans", "n_pages", "partition_id", "kernel_nanos")
-              .as[graft.model.DocResult](org.apache.spark.sql.Encoders.product),
-            snapshotId = 0)
+        DocSources.writeResults(
+          ExtractionPipeline.extract(DocSources.readDocs(spark, a.req("in")), cfg), out)
+        // metrics from the written output's scalar columns (re-running the
+        // extraction would cost more than this pruned scan)
+        ExtractionPipeline.partitionMetrics(spark.read.parquet(out), snapshotId = 0)
           .write.mode("overwrite").parquet(s"$out/_metrics")
       case "resumable" =>
         val report = Snapshot.run(

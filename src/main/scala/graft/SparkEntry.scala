@@ -47,23 +47,6 @@ object SparkEntry {
       case _                     => 4
     }
 
-  /** d8's per-invocation temp label stores, reclaimed together by ONE JVM
-    * shutdown hook (not a hook per invocation). They cannot be deleted
-    * mid-process: the returned currentLabels frame reads the store lazily,
-    * and an earlier invocation's frame may still be executed later. A few
-    * MB per run until exit is the accepted cost of that laziness. */
-  private lazy val d8TempStores: java.util.concurrent.ConcurrentLinkedQueue[String] = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      q.forEach(d => rm(new java.io.File(d)))
-    }))
-    q
-  }
-
   /** d8's child session for the pair build and the per-drop updates: AQE
     * off and 8 shuffle partitions on this session only, so the caller's
     * conf is never touched. Each update is ~10 fixed-shape micro-stages over an
@@ -321,10 +304,8 @@ object SparkEntry {
     "t5_rolling_fingerprint" -> ((s, d) => {
       import s.implicits._
       t(s, d, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          (id, TextAnalysis.rollingHash(
-            Option(text).getOrElse("").toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty)))
-        }.toDF("doc_id", "rolling_fp").orderBy("doc_id")
+        .map { case (id, text) => (id, TextAnalysis.rollingHash(TextAnalysis.words(text))) }
+        .toDF("doc_id", "rolling_fp").orderBy("doc_id")
     }),
     "t6_regex_tokens" -> ((s, d) =>
       TextAnalysis.regexTokens(spread(t(s, d, "documents"))).orderBy("doc_id")),
@@ -396,26 +377,30 @@ object SparkEntry {
         .select("doc_a", "doc_b").persist()
       // fresh per-invocation store: a fixed shared path would let two
       // concurrent runs against the same sf dir delete each other's
-      // in-progress store (and its writer lease) mid-update. The store is
-      // read lazily by the returned currentLabels frame, so it cannot be
-      // deleted here — a JVM shutdown hook reclaims it instead (leaving
-      // nothing behind for the process lifetime it is still readable).
-      // tmpfs when the host has it: the harness store does six parquet
-      // commits (rename-heavy) per run, and /tmp is disk-backed here while
-      // the shuffle dirs already ride /dev/shm (Bench.session) — the store
-      // is still written AND read back inside every timed run
+      // in-progress store (and its writer lease) mid-update. The labels are
+      // collected into a local frame (one row per clustered doc), so the
+      // store lives only as long as this call. tmpfs when the host has it:
+      // the harness store does six parquet commits (rename-heavy) per run,
+      // and /tmp is disk-backed here while the shuffle dirs already ride
+      // /dev/shm (Bench.session)
       val shm = java.nio.file.Paths.get("/dev/shm")
       val dir = (if (java.nio.file.Files.isDirectory(shm))
         java.nio.file.Files.createTempDirectory(shm, "graft_d8_")
       else java.nio.file.Files.createTempDirectory("graft_d8_")).toString
-      d8TempStores.add(dir)
-      // unpersist in the finally: a failed update must not leak the
-      // persisted pair frame in the cache
-      try (0 to 2).foreach { i =>
-        IncrementalClusters.update(pairs.filter(pmod(col("doc_b"), lit(3)) === i),
-          dir, i, localSolveMaxPairs = d7LocalMax)
-      } finally pairs.unpersist(): Unit
-      IncrementalClusters.currentLabels(s, dir).orderBy("doc_id")
+      // unpersist and delete in the finally: a failed update must leak
+      // neither the persisted pair frame nor the store
+      try {
+        (0 to 2).foreach { i =>
+          IncrementalClusters.update(pairs.filter(pmod(col("doc_b"), lit(3)) === i),
+            dir, i, localSolveMaxPairs = d7LocalMax)
+        }
+        val labels = IncrementalClusters.currentLabels(s, dir)
+        s.createDataFrame(java.util.Arrays.asList(labels.collect(): _*), labels.schema)
+          .orderBy("doc_id")
+      } finally {
+        pairs.unpersist()
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      }
     }),
     "c1_curation" -> ((s, d) => {
       // composite curation pipeline: quality gate ∧ language gate ∧
@@ -553,19 +538,13 @@ object SparkEntry {
         .orderBy("media_id")
     }),
     // ---- extraction pipeline (kernel-dependent: rows-only checks) ----
-    "x1_extract_spans" -> ((s, d) => {
+    "x1_extract_spans" -> ((s, d) =>
       // VERIFICATION SHAPE: the trailing global orderBy exists only so the
-      // parquet dump the driver hashes is deterministic. The production
-      // path is ExtractionPipeline.extractSpans (sortWithinPartitions, no
-      // global sort) — PlanSpec pins its single-exchange plan.
-      import s.implicits._
-      ExtractionPipeline.extract(FromTable.docs(s, d),
-        ExtractionPipeline.Config(numPartitions = 16))
-        .select($"doc_id", explode($"spans").as("span"))
-        .select($"doc_id", $"span.offset".as("offset"), $"span.kind".as("kind"),
-          $"span.media_ref".as("media_ref"), $"span.text".as("text"))
-        .orderBy("doc_id", "offset")
-    }),
+      // parquet dump the driver hashes is deterministic; the production
+      // path stops at extractSpans' sortWithinPartitions (PlanSpec pins
+      // its single-exchange plan).
+      ExtractionPipeline.extractSpans(FromTable.docs(s, d),
+        ExtractionPipeline.Config(numPartitions = 16)).orderBy("doc_id", "offset")),
     "x2_kind_histogram" -> ((s, d) => {
       import s.implicits._
       ExtractionPipeline.extract(FromTable.docs(s, d),

@@ -73,10 +73,9 @@ object SqlApi {
     registerColumnFn("lang_id")(TextAnalysis.langIdCol)                // t3
 
     // sketches / fingerprints (same tokenization as the battery operators)
-    def toks(text: String): Seq[String] =
-      Option(text).getOrElse("").toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty)
-    spark.udf.register("simhash60", (text: String) => Dedup.simhash60(toks(text)))
-    spark.udf.register("rolling_fp", (text: String) => TextAnalysis.rollingHash(toks(text)))
+    spark.udf.register("simhash60", (text: String) => Dedup.simhash60(TextAnalysis.words(text)))
+    spark.udf.register("rolling_fp",
+      (text: String) => TextAnalysis.rollingHash(TextAnalysis.words(text)))
 
     // routing (P5) and prompt resolution (P1) for SQL-side dispatch
     spark.udf.register("optimal_prompt_mode",

@@ -35,11 +35,10 @@ object Dedup {
     * tokenizing `split()` into every `element_at` inside the lambda, so the
     * HOF form re-tokenizes each document ~3×#shingles times (measured 30s+
     * on 5k docs). The UDF tokenizes once per row. Semantics are identical
-    * to the DuckDB oracle: lower/trim, split \s+, drop empties, join with
+    * to the DuckDB oracle: [[TextAnalysis.words]] tokens, joined with
     * single spaces, distinct (first occurrence order). */
   private val shinglesUdf = udf { (text: String, n: Int) =>
-    val toks = Option(text).getOrElse("").toLowerCase.trim
-      .split("\\s+").filter(_.nonEmpty)
+    val toks = TextAnalysis.words(text)
     if (toks.length < n) Array.empty[String]
     else {
       val seen = new java.util.LinkedHashSet[String]()
@@ -175,8 +174,7 @@ object Dedup {
     * also retain the full token array on every exploded row, an O(n²)
     * materialization per doc). */
   private val posShinglesUdf = udf { (text: String, k: Int) =>
-    val toks = Option(text).getOrElse("").toLowerCase.trim
-      .split("\\s+").filter(_.nonEmpty)
+    val toks = TextAnalysis.words(text)
     if (toks.length < k) Array.empty[(Int, String)]
     else {
       val out = new Array[(Int, String)](toks.length - k + 1)
@@ -381,8 +379,7 @@ object Dedup {
     import spark.implicits._
     val sims = docs.select(col("doc_id").cast("string"), col(textCol)).as[(String, String)]
       .map { case (id, text) =>
-        (id, simhash60(Option(text).getOrElse("").toLowerCase
-          .split("\\s+").toSeq.filter(_.nonEmpty)))
+        (id, simhash60(TextAnalysis.words(text)))
       }.toDF("doc", "sh")
     bandedPairs(sims, "doc", array((0 until 4).map(b =>
       shiftright(col("sh"), b * 15).bitwiseAND(lit(0x7fffL))): _*), "sh")

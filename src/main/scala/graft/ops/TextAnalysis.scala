@@ -20,6 +20,15 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), x => x =!= lit(""))
 
+  /** The one Scala word tokenizer behind the typed maps and UDFs (t5,
+    * SimHash, shingles, `rolling_fp`/`simhash60` in SQL): lower-cased
+    * whitespace tokens, empties dropped. No `trim`: the empty-token filter
+    * already drops the edge tokens, and Java's `trim` would also strip C0
+    * control characters, which DuckDB's `trim` in the oracles keeps. */
+  def words(text: String): IndexedSeq[String] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      Option(text).getOrElse("").toLowerCase.split("\\s+").filter(_.nonEmpty))
+
   def tokenCount(df: DataFrame, textCol: String = "text"): DataFrame =
     df.select(col("doc_id"), size(tokens(col(textCol))).as("n_tokens"))
 
@@ -82,11 +91,9 @@ object TextAnalysis {
       .select(col("doc_id") +: LangMarkers.map(m => col(s"score_${m._1}")) :+ col("lang_id"): _*)
   }
 
-  /** Document fingerprint: md5 of the case/whitespace-normalized text —
-    * the exact-dedup key. */
+  /** Document fingerprint: the exact-dedup key, [[Dedup.contentHash]]. */
   def fingerprint(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.select(col("doc_id"),
-      md5(lower(trim(col(textCol))).cast("binary")).as("fingerprint"))
+    df.select(col("doc_id"), Dedup.contentHash(col(textCol)).as("fingerprint"))
 
   /** The quality label as a single column expression over raw text — for
     * single-pass composites (c1) that gate on quality without paying a

@@ -4,7 +4,7 @@ import graft.corpus.Synth
 import graft.kernel.Extract
 import graft.model._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The distributed extraction job: `Dataset[Doc]` → `Dataset[DocResult]`.
@@ -95,31 +95,35 @@ object ExtractionPipeline {
       .sortWithinPartitions("doc_id", "offset")
   }
 
-  /** Per-partition lineage/metrics rollup (north rule; FIXTURES.md §5).
-    * wall_ms is the summed kernel time per partition — in local mode task
-    * wall clock ≈ kernel time; at cluster scale attach a SparkListener for
-    * stage-level wall times. */
-  def partitionMetrics(results: Dataset[DocResult], snapshotId: Long): Dataset[PartitionMetric] = {
+  /** The one extraction rollup (north rule: per-partition lineage +
+    * metrics; FIXTURES.md §5): docs, pages, spans, failures, kernel wall
+    * and the doc_id range and failure-code histogram per `key` value
+    * (`partition_id` for [[partitionMetrics]], `bucket` for the snapshot
+    * lineage). Column aggregates only, so neither the scan nor an exchange
+    * carries `spans`: a `(key, failure_code)` partial aggregate, folded per
+    * key with the non-empty codes as `map_from_entries`. `success` may be
+    * the boolean column or the string `success=` partition directory of
+    * `DocSources.writeResults`. wall_ms is the summed kernel time — in
+    * local mode task wall clock ≈ kernel time; at cluster scale attach a
+    * SparkListener for stage-level wall times. */
+  private[pipeline] def rollup(results: Dataset[_], key: String): DataFrame =
+    results.groupBy(col(key), col("failure_code"))
+      .agg(count(lit(1)).as("n"), sum("n_pages").as("pages"), sum("n_spans").as("spans"),
+        count_if(not(col("success").cast("boolean"))).as("failures"),
+        sum("kernel_nanos").as("nanos"), min("doc_id").as("id_min"), max("doc_id").as("id_max"))
+      .groupBy(col(key))
+      .agg(min("id_min").as("doc_id_min"), max("id_max").as("doc_id_max"),
+        sum("n").as("n_docs"), sum("pages").as("n_pages"), sum("spans").as("n_spans"),
+        sum("failures").as("n_failures"),
+        map_from_entries(collect_list(when(col("failure_code") =!= "",
+          struct(col("failure_code"), col("n"))))).as("failure_codes"),
+        expr("sum(nanos) div 1000000").as("wall_ms"))
+
+  /** Per-partition metrics of an extraction: [[rollup]] by `partition_id`. */
+  def partitionMetrics(results: Dataset[_], snapshotId: Long): Dataset[PartitionMetric] = {
     val spark = results.sparkSession
     import spark.implicits._
-    results
-      .groupByKey(_.partition_id)
-      .mapGroups { (pid, it) =>
-        var nDocs = 0L; var nPages = 0L; var nSpans = 0L; var nFail = 0L
-        var nanos = 0L
-        var idMin: String = null; var idMax: String = null
-        val codes = scala.collection.mutable.Map.empty[String, Long]
-        it.foreach { r =>
-          nDocs += 1; nPages += r.n_pages; nSpans += r.n_spans
-          nanos += r.kernel_nanos
-          if (!r.success) nFail += 1
-          if (r.failure_code.nonEmpty)
-            codes(r.failure_code) = codes.getOrElse(r.failure_code, 0L) + 1
-          if (idMin == null || r.doc_id < idMin) idMin = r.doc_id
-          if (idMax == null || r.doc_id > idMax) idMax = r.doc_id
-        }
-        PartitionMetric(snapshotId, pid, idMin, idMax, nDocs, nPages, nSpans,
-          nFail, codes.toMap, nanos / 1000000L)
-      }
+    rollup(results, "partition_id").select(lit(snapshotId).as("snapshot_id"), col("*"))
+      .as[PartitionMetric]
   }
 }

@@ -114,17 +114,11 @@ object Snapshot {
       results.write.mode(SaveMode.Overwrite)
         .partitionBy("bucket")
         .parquet(s"$outDir/data/snapshot=$snapshotId")
-      // lineage per bucket from the written data (one action, small agg)
-      val lineage = spark.read.parquet(s"$outDir/data/snapshot=$snapshotId")
-        .groupBy("bucket")
-        .agg(count("*").as("n_docs"), sum("n_pages").as("n_pages"),
-          sum("n_spans").as("n_spans"),
-          sum(when(not($"success"), 1L).otherwise(0L)).as("n_failures"),
-          sum($"kernel_nanos" / 1000000L).as("wall_ms"))
-        .collect()
-        .map(r => BucketLineage(r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getDouble(5).toLong))
-        .toSeq
+      // lineage per bucket from the written data's scalar columns
+      val lineage = ExtractionPipeline.rollup(
+          spark.read.parquet(s"$outDir/data/snapshot=$snapshotId"), "bucket")
+        .select("bucket", "n_docs", "n_pages", "n_spans", "n_failures", "wall_ms")
+        .as[BucketLineage].collect().toSeq
       commitManifest(outDir, snapshotId, lineage)
       snapshotId += 1
     }

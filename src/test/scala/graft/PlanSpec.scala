@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{ExtractionPipeline, SparkTestSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression checks: the plans that must hold at 100 TB —
@@ -86,6 +87,47 @@ class PlanSpec extends AnyFunSuite {
       || p.contains("l_returnflag"), p.take(900))
   }
 
+  /** AQE wraps the tree in AdaptiveSparkPlanExec whose children are not
+    * traversable pre-execution — inspect the static physical plan instead. */
+  private def staticPlan(df: => org.apache.spark.sql.Dataset[_]): SparkPlan = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("x3 rollup is a column aggregate: no MapGroups, no exchange carries spans") {
+    import org.apache.spark.sql.execution.MapGroupsExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val plan = staticPlan(SparkEntry.queries("x3_partition_metrics")(spark, sf))
+    assert(plan.collect { case m: MapGroupsExec => m }.isEmpty, s"typed rollup in:\n$plan")
+    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size >= 2, s"salting exchange + aggregate exchanges expected:\n$plan")
+    exchanges.foreach { e =>
+      assert(!e.output.exists(_.name == "spans"), s"exchange carries spans:\n$e")
+    }
+  }
+
+  test("metrics over a writeResults directory scan no spans and equal in-memory metrics") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-metrics").toString
+    val results = ExtractionPipeline.extract(
+      ExtractionPipeline.synthDocs(spark, 200, seed = 11, parallelism = 4),
+      ExtractionPipeline.Config(numPartitions = 6)).cache()
+    graft.sources.DocSources.writeResults(results, dir)
+    val fromDir = ExtractionPipeline.partitionMetrics(spark.read.parquet(dir), snapshotId = 0)
+    val scans = staticPlan(fromDir).collect { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty)
+    scans.foreach { s =>
+      assert(!s.requiredSchema.fieldNames.contains("spans"),
+        s"metrics scan reads spans: ${s.requiredSchema.simpleString}")
+    }
+    val inMemory = ExtractionPipeline.partitionMetrics(results, snapshotId = 0).collect()
+    assert(inMemory.exists(_.n_failures > 0) || inMemory.exists(_.failure_codes.nonEmpty))
+    assert(fromDir.collect().sortBy(_.partition_id).toSeq == inMemory.sortBy(_.partition_id).toSeq)
+    results.unpersist()
+  }
+
   /** The banded pair operators emit each pair exactly once from the one
     * (band, key) self-join, so nothing downstream of that join may shuffle
     * or aggregate on the pair ids (the trailing `distinct` shuffle is gone),
@@ -97,13 +139,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    // AQE wraps the tree in AdaptiveSparkPlanExec whose children are not
-    // traversable pre-execution — inspect the static physical plan instead
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan =
-      try SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
     val bandJoins = plan.collect {
       case j: SortMergeJoinExec
         if j.leftKeys.flatMap(_.references.map(_.name)) == Seq("band", "key") => j

@@ -523,9 +523,16 @@ class OpsSpec extends AnyFunSuite {
     // let pass 2 read pass 1's cache — result caching across runs, which
     // the measurement contract forbids. Every operator that persists
     // (duplicateClusters' pair probe, d8's harness + update internals)
-    // must unpersist on every path.
+    // must unpersist on every path. d8's temp label store must be gone too
+    // once the query returns: other runs may hold graft_d8_* dirs of their
+    // own, so compare listings rather than expect none.
     val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
+    val storeRoots = Seq(new java.io.File("/dev/shm"),
+      new java.io.File(System.getProperty("java.io.tmpdir")))
+    def d8Stores(): Set[String] = storeRoots.flatMap(r => Option(r.listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith("graft_d8_")).map(_.getPath).toSet
+    val storesBefore = d8Stores()
     cm.clearCache()
     Seq("d7_dup_clusters", "c2_semantic_curation", "d8_incremental_clusters")
       .foreach { q =>
@@ -533,5 +540,7 @@ class OpsSpec extends AnyFunSuite {
           .write.format("noop").mode("overwrite").save()
         assert(cm.isEmpty, s"$q leaked cached plans")
       }
+    val leaked = d8Stores() -- storesBefore
+    assert(leaked.isEmpty, s"d8 left its label store behind: $leaked")
   }
 }

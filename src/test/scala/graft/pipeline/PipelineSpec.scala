@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.corpus.Synth
 import graft.kernel.Extract
-import graft.model.{DocResult, Span}
+import graft.model.{DocResult, FailureCodes, PartitionMetric, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed-correctness properties (SURVEY.md §5): extraction is
@@ -97,8 +97,19 @@ class PipelineSpec extends AnyFunSuite {
       s"partition loads must be near-uniform: $loads")
   }
 
+  /** The per-partition rollup as it was first written: a typed fold over
+    * each partition's rows — the reference the column aggregate must equal. */
+  private def typedRollup(rs: Seq[DocResult], snapshotId: Long): Set[PartitionMetric] =
+    rs.groupBy(_.partition_id).map { case (pid, group) =>
+      val codes = group.map(_.failure_code).filter(_.nonEmpty)
+        .groupBy(identity).map { case (c, cs) => c -> cs.size.toLong }
+      PartitionMetric(snapshotId, pid, group.map(_.doc_id).min, group.map(_.doc_id).max,
+        group.size.toLong, group.map(_.n_pages.toLong).sum, group.map(_.n_spans.toLong).sum,
+        group.count(!_.success).toLong, codes, group.map(_.kernel_nanos).sum / 1000000L)
+    }.toSet
+
   test("partition metrics sum to corpus totals") {
-    val docs = ExtractionPipeline.synthDocs(spark, 80, seed = 3, parallelism = 4)
+    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 3, parallelism = 4)
     val results = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 6)).cache()
     val m = ExtractionPipeline.partitionMetrics(results, snapshotId = 1).collect()
@@ -107,6 +118,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(m.map(_.n_spans).sum == rs.map(_.n_spans.toLong).sum)
     assert(m.map(_.n_pages).sum == rs.map(_.n_pages.toLong).sum)
     assert(m.map(_.n_failures).sum == rs.count(!_.success))
+    // the corpus must exercise the histogram: warn-level TRUNCATED rows
+    assert(m.exists(_.failure_codes.contains(FailureCodes.Truncated)),
+      m.map(_.failure_codes).mkString("; "))
+    assert(m.toSet == typedRollup(rs.toSeq, snapshotId = 1))
     results.unpersist()
   }
 
@@ -141,6 +156,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(at0.length < 100, "older snapshot must not see later commits")
     assert(canon(Snapshot.readAt(spark, dir, log.last._1).collect().toSeq) == cold)
     assert(log.flatMap(_._2).map(_.n_docs).sum == 100)
+    // lineage totals equal the totals of what readResults sees; wall_ms is
+    // truncated per bucket, so it may fall short by < 1 ms per bucket
+    val lineage = log.flatMap(_._2)
+    val all = Snapshot.readResults(spark, dir).collect()
+    assert(lineage.map(_.bucket).sorted == (0 until 8))
+    assert(lineage.map(_.n_pages).sum == all.map(_.n_pages.toLong).sum)
+    assert(lineage.map(_.n_spans).sum == all.map(_.n_spans.toLong).sum)
+    assert(lineage.map(_.n_failures).sum == all.count(!_.success))
+    val totalMs = all.map(_.kernel_nanos).sum / 1000000L
+    assert(lineage.map(_.wall_ms).sum <= totalMs && lineage.map(_.wall_ms).sum > totalMs - 8)
     docs.unpersist()
   }
 
