@@ -9,13 +9,12 @@ package graft
   *   graft.BenchExtra iso <sfDir> <n> <query>[,<query>...]
   *     — run each named SparkEntry query n times through the noop sink,
   *       print per-run seconds (same session config as the bench battery).
-  *   graft.BenchExtra explain <sfDir> <outDir> <query>[,...]
-  *     — write `.explain("formatted")` for each query to <outDir>/<query>.txt
   *   graft.BenchExtra explain-final <sfDir> <outDir> <query>[,...]
   *     — run each query through a drain first, then write its FINAL
   *       adaptive plan to <outDir>/<query>.final.txt
   *
-  * Per-job wall times come from perfbench's traced runs (job-group spans).
+  * Pre-execution plans come from `graft.Plans`; per-job wall times from
+  * perfbench's traced runs (job-group spans).
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -39,18 +38,6 @@ object BenchExtra {
               .write.format("noop").mode("overwrite").save()
             println(f"$name run$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
           }
-        }
-      case "explain" =>
-        val outDir = args(2)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        args(3).split(',').foreach { name =>
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"$name.txt"),
-            txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          println(s"wrote $outDir/$name.txt")
         }
       case "explain-final" =>
         // execute through the noop sink first, then print the FINAL

@@ -110,7 +110,7 @@ object Main {
           s"skipped=${report.bucketsSkipped.mkString(",")}")
       case "stream" =>
         graft.streaming.StreamingExtract.run(spark, a.req("in"),
-          a.req("out"), a.req("checkpoint"), cfg.mode)
+          a.req("out"), a.req("checkpoint"), cfg)
           .awaitTermination()
       case "synth" =>
         ExtractionPipeline.synthDocs(spark, a.opt("docs").map(_.toLong).getOrElse(100000L),

@@ -68,8 +68,11 @@ case class CappedCollectList(
   private lazy val projection = UnsafeProjection.create(
     Array[DataType](ArrayType(elementType = child.dataType, containsNull = false)))
 
+  // the projection reuses one row buffer, and getBytes returns that buffer
+  // itself when the row fills it exactly: copy, or the next serialize
+  // overwrites a result the caller still holds
   override def serialize(obj: mutable.ArrayBuffer[Any]): Array[Byte] =
-    projection.apply(InternalRow.apply(new GenericArrayData(obj.toArray))).getBytes
+    projection.apply(InternalRow.apply(new GenericArrayData(obj.toArray))).copy().getBytes
 
   override def deserialize(bytes: Array[Byte]): mutable.ArrayBuffer[Any] = {
     val buffer = createAggregationBuffer()

@@ -2,6 +2,8 @@ package graft.kernel
 
 import graft.model._
 
+import scala.util.control.NonFatal
+
 /** The per-document extraction kernel: pure Scala, zero Spark dependencies,
   * so the same code is unit-tested directly and executed inside
   * `mapPartitions` (SURVEY.md §7 M1/M2).
@@ -22,6 +24,9 @@ import graft.model._
   *      pictures get a deterministic `bbox://` ref.
   * Failures are data (`failure_code`), never exceptions; truncated pages keep
   * their complete prefix (warn-not-fail, tests/test_accuracy.py:190-199).
+  * Input the kernel cannot read at all (a null span element or text, which
+  * parquet allows) becomes a fatal KERNEL_ERROR row for its doc_id, so one
+  * such document cannot fail the whole job.
   */
 object Extract {
 
@@ -36,6 +41,14 @@ object Extract {
 
   def extractDoc(doc: Doc, opts: Options = Options()): DocResult = {
     val t0 = System.nanoTime()
+    try extractChecked(doc, opts, t0)
+    catch {
+      case NonFatal(_) => DocResult(doc.doc_id, Seq.empty, success = false,
+        FailureCodes.KernelError, 0, 0, -1, System.nanoTime() - t0)
+    }
+  }
+
+  private def extractChecked(doc: Doc, opts: Options, t0: Long): DocResult = {
     if (!Router.groundingOk(opts.mode, opts.groundingBbox)) {
       return DocResult(doc.doc_id, Seq.empty, success = false,
         FailureCodes.BboxRequired, 0, 0, -1, System.nanoTime() - t0)

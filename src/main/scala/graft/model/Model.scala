@@ -88,11 +88,14 @@ object FailureCodes {
   /** Elements failing structural validation were dropped (tests/test_accuracy.py:74-99). */
   val SchemaViolation = "SCHEMA_VIOLATION"
   val EmptyDoc = "EMPTY_DOC"
+  /** The kernel threw on input it cannot read (a null span element or
+    * text); the doc is a failure row instead of failing its task. */
+  val KernelError = "KERNEL_ERROR"
 
   /** Severity order for reducing page-level codes to a doc-level code. */
   private val severity: Map[String, Int] = Map(
     Ok -> 0, SchemaViolation -> 1, Truncated -> 2,
-    EmptyDoc -> 3, BboxRequired -> 4, JsonRecoveryFailed -> 5)
+    EmptyDoc -> 3, BboxRequired -> 4, JsonRecoveryFailed -> 5, KernelError -> 6)
   def worse(a: String, b: String): String =
     if (severity.getOrElse(b, 9) > severity.getOrElse(a, 9)) b else a
   /** Fatal codes flip `success` to false; TRUNCATED and SCHEMA_VIOLATION are

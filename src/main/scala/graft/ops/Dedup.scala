@@ -29,28 +29,30 @@ object Dedup {
       .agg(min(col("doc_id")).as("keeper_doc_id"),
         count(lit(1)).as("n_docs"))
 
-  /** Distinct word `n`-gram shingles of a text column, single pass.
+  /** Positional word `n`-gram shingles of a text column, single pass:
+    * element i is tokens i until i + n ([[TextAnalysis.words]] tokens,
+    * joined with single spaces), so the array index is the position.
     *
     * NOT a higher-order-function expression: CollapseProject inlines the
     * tokenizing `split()` into every `element_at` inside the lambda, so the
     * HOF form re-tokenizes each document ~3×#shingles times (measured 30s+
-    * on 5k docs). The UDF tokenizes once per row. Semantics are identical
-    * to the DuckDB oracle: [[TextAnalysis.words]] tokens, joined with
-    * single spaces, distinct (first occurrence order). */
-  private val shinglesUdf = udf { (text: String, n: Int) =>
+    * on 5k docs), and a `slice(toks, pos+1, n)` per exploded row would
+    * retain the full token array on every row. The UDF tokenizes once per
+    * row. */
+  private val positionalShinglesUdf = udf { (text: String, n: Int) =>
     val toks = TextAnalysis.words(text)
     if (toks.length < n) Array.empty[String]
     else {
-      val seen = new java.util.LinkedHashSet[String]()
+      val out = new Array[String](toks.length - n + 1)
       var i = 0
       while (i + n <= toks.length) {
         val sb = new StringBuilder(toks(i))
         var j = 1
         while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        seen.add(sb.toString)
+        out(i) = sb.toString
         i += 1
       }
-      seen.toArray(new Array[String](seen.size))
+      out
     }
   }.asNondeterministic()
   // ^ the function IS pure — asNondeterministic is the guide-§4.4 pin that
@@ -59,7 +61,10 @@ object Dedup {
   // evaluated the tokenize+shingle UDF THREE times per row (twice inside a
   // scan-stage Filter on the single input split, once in the projection)
 
-  def shingles(text: Column, n: Int = 3): Column = shinglesUdf(text, lit(n))
+  /** Distinct word `n`-gram shingles in first-occurrence order — the same
+    * set and order as the DuckDB oracle's. */
+  def shingles(text: Column, n: Int = 3): Column =
+    array_distinct(positionalShinglesUdf(text, lit(n)))
 
   /** Exploded (doc_id, shingle, n_shingles) — the self-join input. */
   def shingleRows(docs: DataFrame, textCol: String = "text", n: Int = 3): DataFrame = {
@@ -168,28 +173,6 @@ object Dedup {
       .select("doc_a", "doc_b", "n_common", "jaccard")
   }
 
-  /** Positional k-token shingles: (pos, shingle) pairs, one per token
-    * position — a single pass per document (same CollapseProject rationale
-    * as [[shinglesUdf]]; an expression-level `slice(toks, pos+1, k)` would
-    * also retain the full token array on every exploded row, an O(n²)
-    * materialization per doc). */
-  private val posShinglesUdf = udf { (text: String, k: Int) =>
-    val toks = TextAnalysis.words(text)
-    if (toks.length < k) Array.empty[(Int, String)]
-    else {
-      val out = new Array[(Int, String)](toks.length - k + 1)
-      var i = 0
-      while (i + k <= toks.length) {
-        val sb = new StringBuilder(toks(i))
-        var j = 1
-        while (j < k) { sb.append(' ').append(toks(i + j)); j += 1 }
-        out(i) = (i, sb.toString)
-        i += 1
-      }
-      out
-    }
-  }.asNondeterministic() // pure; pinned for the same §4.4 reason as shinglesUdf
-
   /** Repeated-substring spans (Lee et al. '22 "Deduplicating Training Data"
     * shape): every maximal token range covered by `k`-token shingles that
     * occur at least `minOccurrences` times in the corpus — the exact
@@ -217,9 +200,10 @@ object Dedup {
     // the count branch and again for the join branch — guide §2.4). The
     // exchange still carries only (doc_id, pos, h) scalars, never text.
     val sh = docs
-      .select(col("doc_id"), posexplode(posShinglesUdf(col(textCol), lit(k))))
-      .select(col("doc_id"), col("col._1").as("pos"),
-        conv(substring(md5(col("col._2").cast("binary")), 1, 15), 16, 10)
+      .select(col("doc_id"),
+        posexplode(positionalShinglesUdf(col(textCol), lit(k))).as(Seq("pos", "shingle")))
+      .select(col("doc_id"), col("pos"),
+        conv(substring(md5(col("shingle").cast("binary")), 1, 15), 16, 10)
           .cast("long").as("h"))
       .repartition(col("h"))
     val dup = sh.groupBy("h").agg(count(lit(1)).as("n"))

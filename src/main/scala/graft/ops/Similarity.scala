@@ -10,16 +10,10 @@ import org.apache.spark.sql.functions._
   * Baseline: brute-force cosine top-k with the small query side broadcast
   * (no shuffle of the corpus). Scale path: random-hyperplane LSH buckets —
   * the corpus is bucketed once by signature, queries probe only their
-  * bucket, turning the scan into an equi-join. Dot products are codegen'd
-  * `zip_with`/`aggregate` expressions, not UDFs.
+  * bucket, turning the scan into an equi-join. Dot products are native
+  * codegen expressions ([[graft.functions.VecMath]]), not UDFs.
   */
 object Similarity {
-
-  /** Cosine similarity of two float-array columns (computed in double,
-    * native codegen expressions — never the aggregate(zip_with(...)) form,
-    * which materializes a dim-element struct array per row). */
-  def cosine(a: Column, b: Column): Column =
-    VecMath.vecDot(a, b) / (VecMath.vecNorm(a) * VecMath.vecNorm(b))
 
   /** Sequential-order double dot product as a tight-loop UDF. Kept ONLY as
     * the test baseline for [[graft.functions.VecDot]] (the native codegen
@@ -38,25 +32,37 @@ object Similarity {
   /** Euclidean norm column via the same strict summation (native codegen). */
   def normCol(emb: Column): Column = VecMath.vecNorm(emb)
 
-  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
-    * vectors (excluding itself). Query side is broadcast; ranking is
-    * deterministic (cosine desc, then vec_id). Output ranks only — FP
+  /** A join key for [[topKByCosine]]: its column name, the corpus row's
+    * one key and the query row's probe keys (an array, exploded). */
+  private final case class ProbeKey(name: String, corpus: Column, probes: Column)
+
+  /** The one cosine top-k ranker behind s1–s5: for each query vector, the
+    * k nearest corpus vectors (excluding itself). The query side is
+    * broadcast; without a key every corpus row is scored (cross join),
+    * with one only the corpus rows sharing a probe key (equi-join). Ranking
+    * is deterministic (cosine desc, then vec_id). Output ranks only — FP
     * noise in the similarity value itself stays out of the contract. */
-  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+  private def topKByCosine(corpus: DataFrame, queries: DataFrame, k: Int,
+                           key: Option[ProbeKey]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      normCol(col("embedding")).as("q_norm"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
-      normCol(col("embedding")).as("c_norm"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val emb = col("embedding")
+    val c = corpus.select(Seq(col("vec_id").as("neighbor_id"), emb.as("c_emb"),
+      normCol(emb).as("c_norm")) ++ key.map(p => p.corpus.as(p.name)): _*)
+    val q = queries.select(Seq(col("vec_id").as("query_id"), emb.as("q_emb"),
+      normCol(emb).as("q_norm")) ++ key.map(p => explode(p.probes).as(p.name)): _*)
+    val joined = key.fold(c.crossJoin(broadcast(q)))(p => c.join(broadcast(q), Seq(p.name)))
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
+    joined.filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos",
         VecMath.vecDot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
+      .select((Seq("query_id") ++ key.map(_.name) ++ Seq("rank", "neighbor_id")).map(col): _*)
   }
+
+  /** Brute-force cosine top-k over the whole corpus (s1). */
+  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topKByCosine(corpus, queries, k, None)
 
   /** Deterministic random hyperplanes: component j of plane p is a unit
     * normal-ish value from splitmix64 (seeded, reproducible cluster-wide). */
@@ -72,12 +78,16 @@ object Similarity {
     * struct array per plane per row (planes × dim structs/row); the
     * compiled loop reads the ArrayData in place. Same left-to-right double
     * sum, so bucket signs (and every oracle) are unchanged. */
-  def lshBucket(emb: Column, planes: Array[Array[Double]]): Column = {
-    val bits = planes.zipWithIndex.map { case (plane, i) =>
-      when(VecMath.vecDotConst(emb, plane) >= 0, lit(1 << i)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
+  def lshBucket(emb: Column, planes: Array[Array[Double]]): Column =
+    signBits(planeDots(emb, planes))
+
+  private def planeDots(emb: Column, planes: Array[Array[Double]]): IndexedSeq[Column] =
+    planes.toIndexedSeq.map(VecMath.vecDotConst(emb, _))
+
+  /** Bit i set iff plane dot i is ≥ 0. */
+  private def signBits(dots: IndexedSeq[Column]): Column =
+    dots.zipWithIndex.map { case (d, i) => when(d >= 0, lit(1 << i)).otherwise(lit(0)) }
+      .reduce(_ + _)
 
   /** Deterministic random coarse-quantizer centers for IVF (same splitmix64
     * scheme as `hyperplanes`, different stream). Data-independent on
@@ -137,13 +147,15 @@ object Similarity {
     * VecDotConst per center, first-min tie-break (array_position), shared
     * exactly with the oracle's (dist, cid) row_number. */
   def ivfCellCol(emb: Column, centers: Array[Array[Double]]): Column = {
-    val dists = centers.toIndexedSeq.map { c =>
-      graft.functions.VecMath.vecDotConst(emb, c.map(-2.0 * _)) +
-        lit(c.map(x => x * x).sum)
-    }
-    val arr = array(dists: _*)
+    val arr = array(centerDists(emb, centers): _*)
     array_position(arr, array_min(arr)).cast("int")
   }
+
+  /** Squared L2 from `emb` to each center, less the row constant |v|². */
+  private def centerDists(emb: Column, centers: Array[Array[Double]]): IndexedSeq[Column] =
+    centers.toIndexedSeq.map { c =>
+      VecMath.vecDotConst(emb, c.map(-2.0 * _)) + lit(c.map(x => x * x).sum)
+    }
 
   /** The `nprobe` nearest cell ids (1-based), ordered nearest-first: the
     * per-center distance structs sort by (dist, cell) — the same first-min
@@ -152,11 +164,8 @@ object Similarity {
                        nprobe: Int): Column = {
     require(nprobe >= 1 && nprobe <= centers.length,
       s"nprobe must be in [1, ${centers.length}], got $nprobe")
-    val dists = centers.toIndexedSeq.zipWithIndex.map { case (c, i) =>
-      struct(
-        (graft.functions.VecMath.vecDotConst(emb, c.map(-2.0 * _)) +
-          lit(c.map(x => x * x).sum)).as("dist"),
-        lit(i + 1).as("cell"))
+    val dists = centerDists(emb, centers).zipWithIndex.map { case (d, i) =>
+      struct(d.as("dist"), lit(i + 1).as("cell"))
     }
     transform(slice(array_sort(array(dists: _*)), 1, nprobe), x => x("cell"))
   }
@@ -183,23 +192,10 @@ object Similarity {
                  seed: Long = Synth.DefaultSeed,
                  centersOverride: Option[Array[Array[Double]]] = None,
                  nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centers = centersOverride.getOrElse(ivfCenters(nCenters, dim, seed))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
-      normCol(col("embedding")).as("c_norm"),
-      ivfCellCol(col("embedding"), centers).as("cell"))
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      normCol(col("embedding")).as("q_norm"),
-      explode(ivfProbeCellsCol(col("embedding"), centers, nprobe)).as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        graft.functions.VecMath.vecDot(col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "cell", "rank", "neighbor_id")
+    val emb = col("embedding")
+    topKByCosine(corpus, queries, k, Some(ProbeKey("cell",
+      ivfCellCol(emb, centers), ivfProbeCellsCol(emb, centers, nprobe))))
   }
 
   /** Multi-probe bucket set, nearest-first: element 1 is the base
@@ -213,15 +209,11 @@ object Similarity {
                          nprobe: Int): Column = {
     require(nprobe >= 1 && nprobe <= planes.length + 1,
       s"nprobe must be in [1, ${planes.length + 1}], got $nprobe")
-    val dots = planes.toIndexedSeq.zipWithIndex.map { case (p, i) =>
-      (VecMath.vecDotConst(emb, p), i)
-    }
-    val base = dots.map { case (d, i) =>
-      when(d >= 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
+    val dots = planeDots(emb, planes)
+    val base = signBits(dots)
     if (nprobe == 1) array(base)
     else {
-      val margins = dots.map { case (d, i) =>
+      val margins = dots.zipWithIndex.map { case (d, i) =>
         struct(abs(d).as("m"), lit(1 << i).as("mask"))
       }
       val flips = slice(array_sort(array(margins: _*)), 1, nprobe - 1)
@@ -243,21 +235,9 @@ object Similarity {
                  nPlanes: Int = 8, dim: Int = 64,
                  seed: Long = Synth.DefaultSeed,
                  nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val planes = hyperplanes(nPlanes, dim, seed)
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"),
-      normCol(col("embedding")).as("c_norm"),
-      lshBucket(col("embedding"), planes).as("bucket"))
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      normCol(col("embedding")).as("q_norm"),
-      explode(lshProbeBucketsCol(col("embedding"), planes, nprobe)).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        VecMath.vecDot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "bucket", "rank", "neighbor_id")
+    val emb = col("embedding")
+    topKByCosine(corpus, queries, k, Some(ProbeKey("bucket",
+      lshBucket(emb, planes), lshProbeBucketsCol(emb, planes, nprobe))))
   }
 }

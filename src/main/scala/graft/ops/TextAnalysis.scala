@@ -35,31 +35,32 @@ object TextAnalysis {
   /** Stopword list used by the quality/language heuristics (fixed, public). */
   val EnStopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "in", "is", "on")
 
-  /** Quality scoring: length, punctuation/digit ratios, stopword ratio,
-    * mean token length, and a coarse quality label — the classic C4-style
-    * heuristics, all as column arithmetic. */
-  def qualityScore(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  /** The quality rule — length, punctuation/digit ratios, stopword ratio,
+    * mean token length (the classic C4-style heuristics, all as column
+    * arithmetic) — as its named component columns and the quality label
+    * built from them. */
+  private def qualityRule(t: Column): (Seq[Column], Column) = {
     val toks = tokens(t)
     val nToks = size(toks)
     val nChars = length(t)
+    def ratio(n: Column, d: Column): Column = round(n.cast("double") / greatest(d, lit(1)), 6)
     val punct = nChars - length(regexp_replace(t, "[.,;:!?]", ""))
     val digits = nChars - length(regexp_replace(t, "[0-9]", ""))
-    val stopHits = size(filter(toks, x => x.isin(EnStopwords: _*)))
-    df.select(
-      col("doc_id"),
-      nChars.as("n_chars"),
-      nToks.as("n_tokens"),
-      round(punct.cast("double") / greatest(nChars, lit(1)), 6).as("punct_ratio"),
-      round(digits.cast("double") / greatest(nChars, lit(1)), 6).as("digit_ratio"),
-      round(stopHits.cast("double") / greatest(nToks, lit(1)), 6).as("stopword_ratio"),
-      round((nChars - nToks + 1).cast("double") / greatest(nToks, lit(1)), 6)
-        .as("mean_token_len"))
-      .withColumn("quality_label",
-        when(col("n_tokens") < 10, "too_short")
-          .when(col("stopword_ratio") < 0.01, "suspicious")
-          .when(col("mean_token_len") > 12.0, "suspicious")
-          .otherwise("ok"))
+    val stopRatio = ratio(size(filter(toks, x => x.isin(EnStopwords: _*))), nToks)
+    val meanTokLen = ratio(nChars - nToks + 1, nToks)
+    val label = when(nToks < 10, "too_short")
+      .when(stopRatio < 0.01, "suspicious")
+      .when(meanTokLen > 12.0, "suspicious")
+      .otherwise("ok")
+    (Seq(nChars.as("n_chars"), nToks.as("n_tokens"), ratio(punct, nChars).as("punct_ratio"),
+      ratio(digits, nChars).as("digit_ratio"), stopRatio.as("stopword_ratio"),
+      meanTokLen.as("mean_token_len")), label)
+  }
+
+  /** Quality scoring: [[qualityRule]]'s components and `quality_label`. */
+  def qualityScore(df: DataFrame, textCol: String = "text"): DataFrame = {
+    val (components, label) = qualityRule(col(textCol))
+    df.select(col("doc_id") +: components :+ label.as("quality_label"): _*)
   }
 
   /** Marker-token sets for the n-gram/stopword language-ID heuristic. */
@@ -69,26 +70,28 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "et", "les", "est"),
     "es" -> Seq("el", "los", "las", "es", "una"))
 
-  /** Language ID: count marker-token hits per language, pick the argmax
-    * (fixed priority order on ties; "und" = undetermined when no hits,
-    * "zh" when CJK codepoints are present). Deterministic and expressible
+  /** The language-ID rule as its `score_<lang>` marker-hit columns and the
+    * language picked from them: the argmax (fixed priority order on ties —
+    * a chained CASE in list order; "und" = undetermined when no hits, "zh"
+    * when CJK codepoints are present). Deterministic and expressible
     * identically in the DuckDB oracle. */
+  private def langRule(t: Column): (Seq[Column], Column) = {
+    val toks = tokens(lower(t))
+    val scores = LangMarkers.map { case (lang, ms) =>
+      lang -> size(filter(toks, x => x.isin(ms: _*)))
+    }
+    val maxScore = greatest(scores.map(_._2): _*)
+    val pick = scores.foldRight(lit("und")) { case ((lang, sc), els) =>
+      when(sc === maxScore && maxScore > 0, lit(lang)).otherwise(els)
+    }
+    (scores.map { case (lang, sc) => sc.as(s"score_$lang") },
+      when(t.rlike("[\\u4e00-\\u9fff]"), "zh").otherwise(pick))
+  }
+
+  /** Language ID: [[langRule]]'s per-language scores and `lang_id`. */
   def langId(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = tokens(lower(col(textCol)))
-    val scored = LangMarkers.foldLeft(
-      df.select(col("doc_id"), col(textCol).as("__t"), toks.as("__toks"))) {
-      case (acc, (lang, markers)) =>
-        acc.withColumn(s"score_$lang", size(filter(col("__toks"), x => x.isin(markers: _*))))
-    }
-    // argmax with deterministic priority = chained CASE in list order
-    val maxScore = greatest(LangMarkers.map(m => col(s"score_${m._1}")): _*)
-    val pick = LangMarkers.foldRight(lit("und")) { case ((lang, _), els) =>
-      when(col(s"score_$lang") === maxScore && maxScore > 0, lit(lang)).otherwise(els)
-    }
-    scored
-      .withColumn("lang_id",
-        when(col("__t").rlike("[\\u4e00-\\u9fff]"), "zh").otherwise(pick))
-      .select(col("doc_id") +: LangMarkers.map(m => col(s"score_${m._1}")) :+ col("lang_id"): _*)
+    val (scores, label) = langRule(col(textCol))
+    df.select(col("doc_id") +: scores :+ label.as("lang_id"): _*)
   }
 
   /** Document fingerprint: the exact-dedup key, [[Dedup.contentHash]]. */
@@ -97,36 +100,11 @@ object TextAnalysis {
 
   /** The quality label as a single column expression over raw text — for
     * single-pass composites (c1) that gate on quality without paying a
-    * separate scan per derived table. Same rounded-ratio semantics as
-    * `qualityScore` (spec-pinned equal). */
-  def qualityLabelCol(t: Column): Column = {
-    val toks = tokens(t)
-    val nToks = size(toks)
-    val nChars = length(t)
-    val stopHits = size(filter(toks, x => x.isin(EnStopwords: _*)))
-    val stopRatio = round(stopHits.cast("double") / greatest(nToks, lit(1)), 6)
-    val meanTokLen =
-      round((nChars - nToks + 1).cast("double") / greatest(nToks, lit(1)), 6)
-    when(nToks < 10, "too_short")
-      .when(stopRatio < 0.01, "suspicious")
-      .when(meanTokLen > 12.0, "suspicious")
-      .otherwise("ok")
-  }
+    * separate scan per derived table. */
+  def qualityLabelCol(t: Column): Column = qualityRule(t)._2
 
-  /** The language id as a single column expression (same argmax/tie/zh
-    * semantics as `langId`; spec-pinned equal). */
-  def langIdCol(t: Column): Column = {
-    val toks = tokens(lower(t))
-    val scores = LangMarkers.map { case (_, ms) =>
-      size(filter(toks, x => x.isin(ms: _*)))
-    }
-    val maxScore = greatest(scores: _*)
-    val pick = LangMarkers.zip(scores).foldRight(lit("und")) {
-      case (((lang, _), sc), els) =>
-        when(sc === maxScore && maxScore > 0, lit(lang)).otherwise(els)
-    }
-    when(t.rlike("[\\u4e00-\\u9fff]"), "zh").otherwise(pick)
-  }
+  /** The language id as a single column expression over raw text. */
+  def langIdCol(t: Column): Column = langRule(t)._2
 
   /** BPE-ish regex token counting: letter runs, digit runs, and single
     * non-alphanumeric marks — the tokenizer-shaped budget count used when a

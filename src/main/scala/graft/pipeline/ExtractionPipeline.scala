@@ -101,9 +101,12 @@ object ExtractionPipeline {
     * (`partition_id` for [[partitionMetrics]], `bucket` for the snapshot
     * lineage). Column aggregates only, so neither the scan nor an exchange
     * carries `spans`: a `(key, failure_code)` partial aggregate, folded per
-    * key with the non-empty codes as `map_from_entries`. `success` may be
-    * the boolean column or the string `success=` partition directory of
-    * `DocSources.writeResults`. wall_ms is the summed kernel time — in
+    * key with the non-empty codes as `map_from_entries`. The partials (at
+    * most keys × codes rows) are coalesced into one partition, which the
+    * fold's distribution accepts as is: one exchange in all, and its reduce
+    * is a single task, not `spark.sql.shuffle.partitions` of them.
+    * `success` may be the boolean column or the string `success=`
+    * partition directory of `DocSources.writeResults`. wall_ms is the summed kernel time — in
     * local mode task wall clock ≈ kernel time; at cluster scale attach a
     * SparkListener for stage-level wall times. */
   private[pipeline] def rollup(results: Dataset[_], key: String): DataFrame =
@@ -111,6 +114,7 @@ object ExtractionPipeline {
       .agg(count(lit(1)).as("n"), sum("n_pages").as("pages"), sum("n_spans").as("spans"),
         count_if(not(col("success").cast("boolean"))).as("failures"),
         sum("kernel_nanos").as("nanos"), min("doc_id").as("id_min"), max("doc_id").as("id_max"))
+      .coalesce(1)
       .groupBy(col(key))
       .agg(min("id_min").as("doc_id_min"), max("id_max").as("doc_id_max"),
         sum("n").as("n_docs"), sum("pages").as("n_pages"), sum("spans").as("n_spans"),

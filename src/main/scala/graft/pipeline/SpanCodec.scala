@@ -17,17 +17,19 @@ import graft.model.Span
   *
   * Layout: varint span count, then per span a kind token (dictionary byte
   * for the input kinds "text"/"media", an inline marker byte plus the
-  * string otherwise; unpack rejects any other byte), the text
+  * string otherwise, a null marker byte alone for a null span element;
+  * unpack rejects any other byte), the text
   * and media_ref as nullable strings (varint(len+1), 0 = null), and the
-  * offset as a zigzag varint. Exact round-trip including null fields and
-  * supplementary-plane text (property-tested); `null` span arrays encode
-  * as empty — [[graft.kernel.Extract.extractDoc]] already maps both to the
-  * same EMPTY_DOC result. */
+  * offset as a zigzag varint. Exact round-trip including null elements and
+  * fields and supplementary-plane text (property-tested); `null` span
+  * arrays encode as empty — [[graft.kernel.Extract.extractDoc]] already
+  * maps both to the same EMPTY_DOC result. */
 object SpanCodec {
 
   private val KindText = 0
   private val KindMedia = 1
   private val KindInline = 2
+  private val KindNull = 3
 
   private final class Buf(var a: Array[Byte], var n: Int) {
     def ensure(k: Int): Unit =
@@ -59,15 +61,18 @@ object SpanCodec {
     val b = new Buf(new Array[Byte](64 * spans.size), 0)
     b.varint(spans.size.toLong)
     spans.foreach { s =>
-      s.kind match {
-        case "text"  => b.byte(KindText)
-        case "media" => b.byte(KindMedia)
-        case k       => b.byte(KindInline); putNullable(b, k)
+      if (s == null) b.byte(KindNull)
+      else {
+        s.kind match {
+          case "text"  => b.byte(KindText)
+          case "media" => b.byte(KindMedia)
+          case k       => b.byte(KindInline); putNullable(b, k)
+        }
+        putNullable(b, s.text)
+        putNullable(b, s.media_ref)
+        val off = s.offset.toLong
+        b.varint((off << 1) ^ (off >> 63)) // zigzag: offsets can be any int
       }
-      putNullable(b, s.text)
-      putNullable(b, s.media_ref)
-      val off = s.offset.toLong
-      b.varint((off << 1) ^ (off >> 63)) // zigzag: offsets can be any int
     }
     java.util.Arrays.copyOf(b.a, b.n)
   }
@@ -120,17 +125,21 @@ object SpanCodec {
     out.sizeHint(count)
     var i = 0
     while (i < count) {
-      val k = nextByte() & 0xff match {
-        case KindText   => "text"
-        case KindMedia  => "media"
-        case KindInline => nullable()
-        case other      => fail(s"unknown span kind byte $other")
+      val kind = nextByte() & 0xff
+      if (kind == KindNull) out += null
+      else {
+        val k = kind match {
+          case KindText   => "text"
+          case KindMedia  => "media"
+          case KindInline => nullable()
+          case other      => fail(s"unknown span kind byte $other")
+        }
+        val text = nullable()
+        val ref = nullable()
+        val zz = varint()
+        val off = ((zz >>> 1) ^ -(zz & 1)).toInt
+        out += Span(k, text, ref, off)
       }
-      val text = nullable()
-      val ref = nullable()
-      val zz = varint()
-      val off = ((zz >>> 1) ^ -(zz & 1)).toInt
-      out += Span(k, text, ref, off)
       i += 1
     }
     out.result()

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.kernel.Extract
 import graft.model.Doc
 import graft.pipeline.ExtractionPipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
@@ -21,18 +20,18 @@ object StreamingExtract {
   val docSchema = Encoders.product[Doc].schema
 
   /** Start (or resume) incremental extraction: new parquet files under
-    * `inDir` → extracted results appended under `outDir`. */
+    * `inDir` → extracted results appended under `outDir`. Each micro-batch
+    * runs the batch job, [[ExtractionPipeline.extract]], with `cfg`. */
   def run(spark: SparkSession, inDir: String, outDir: String,
           checkpointDir: String,
-          mode: String = graft.kernel.Router.LayoutAll): StreamingQuery = {
+          cfg: ExtractionPipeline.Config = ExtractionPipeline.Config()): StreamingQuery = {
     import spark.implicits._
-    val opts = Extract.Options(mode = mode)
-    spark.readStream
+    val docs = spark.readStream
       .schema(docSchema)
       .option("maxFilesPerTrigger", 64)
       .parquet(inDir)
       .as[Doc]
-      .map(d => Extract.extractDoc(d, opts))
+    ExtractionPipeline.extract(docs, cfg)
       .writeStream
       .format("parquet")
       .option("path", outDir)

@@ -108,6 +108,22 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("the extraction rollup has one exchange, and its reduce is one task") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import spark.implicits._
+    val results = (0 until 40).map(i => graft.model.DocResult(f"d$i%03d", Seq.empty,
+      success = i % 7 != 0, if (i % 7 == 0) "EMPTY_DOC" else "", 0, 1, i % 5, 1000L)).toDS()
+    val metrics = ExtractionPipeline.partitionMetrics(results, snapshotId = 0)
+    val plan = staticPlan(metrics)
+    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"the fold must not shuffle again:\n$plan")
+    assert(staticPlan(SparkEntry.queries("x3_partition_metrics")(spark, sf))
+      .collect { case e: ShuffleExchangeLike => e }.size == 2,
+      "x3: the salting exchange and the one rollup exchange")
+    assert(plan.execute().getNumPartitions == 1)
+    assert(metrics.collect().map(_.n_docs).sum == 40)
+  }
+
   test("metrics over a writeResults directory scan no spans and equal in-memory metrics") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files.createTempDirectory("graft-metrics").toString

@@ -39,6 +39,20 @@ class CappedCollectListSpec extends AnyFunSuite {
     assert(out(2) == Seq(7L))
   }
 
+  test("serialize returns a private array: a second serialize leaves the first intact") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.LongType
+    import scala.collection.mutable.ArrayBuffer
+    // sizes around every power-of-two boundary of the projection's buffer
+    (1 to 64).foreach { n =>
+      val agg = CappedCollectList(BoundReference(0, LongType, nullable = false), 100)
+      val first = ArrayBuffer[Any]((0 until n).map(_.toLong): _*)
+      val bytes = agg.serialize(first)
+      agg.serialize(ArrayBuffer[Any]((0 until n).map(i => -1L - i): _*))
+      assert(agg.deserialize(bytes) == first, s"$n elements: first result overwritten")
+    }
+  }
+
   test("d2 equivalence: capped path ≡ count-prepass + anti-join reference on a hot-key corpus") {
     import spark.implicits._
     // 12 docs share one boilerplate shingle (df > cap 8); unique tails

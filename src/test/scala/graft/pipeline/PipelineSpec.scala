@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.corpus.Synth
 import graft.kernel.Extract
-import graft.model.{DocResult, FailureCodes, PartitionMetric, Span}
+import graft.model.{Doc, DocResult, FailureCodes, PartitionMetric, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed-correctness properties (SURVEY.md §5): extraction is
@@ -32,16 +32,20 @@ class PipelineSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(31)
     val pool = Seq("plain ascii", "देवनागरी पाठ 😀", "𐀀 supplementary ｡",
       "", null, "tab\tnl\nquote\"back\\slash", "x" * 5000)
-    def randSpan(): Span = Span(
-      Seq("text", "media", "Table", "Weird-kind", "", null)(rnd.nextInt(6)),
-      pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size)),
-      rnd.nextInt() // any int, including negative
-    )
+    def randSpan(): Span =
+      if (rnd.nextInt(10) == 0) null // parquet admits null elements
+      else Span(
+        Seq("text", "media", "Table", "Weird-kind", "", null)(rnd.nextInt(6)),
+        pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size)),
+        rnd.nextInt() // any int, including negative
+      )
     (0 until 200).foreach { _ =>
       val spans = Vector.fill(rnd.nextInt(40))(randSpan())
       val back = SpanCodec.unpack(SpanCodec.pack(spans))
       assert(back == spans, s"roundtrip diverged for $spans")
     }
+    val nulls = Vector(null, Span("text", "t", "", 0), null)
+    assert(SpanCodec.unpack(SpanCodec.pack(nulls)) == nulls)
     // degenerate forms: null and empty both decode to empty (extractDoc
     // maps both to the same EMPTY_DOC result)
     assert(SpanCodec.unpack(SpanCodec.pack(null)) == Vector.empty)
@@ -52,10 +56,10 @@ class PipelineSpec extends AnyFunSuite {
       assert(SpanCodec.unpack(SpanCodec.pack(s)) == s)
     }
     // corrupt blobs fail loudly instead of decoding to other spans: every
-    // kind byte past the three the encoder writes, a truncated blob, and a
+    // kind byte past the four the encoder writes, a truncated blob, and a
     // string length running past the end
     val good = SpanCodec.pack(Vector(Span("text", "abc", "", 0)))
-    for (kind <- 3 to 255) {
+    for (kind <- 4 to 255) {
       val bad = good.clone(); bad(1) = kind.toByte
       val e = intercept[IllegalArgumentException](SpanCodec.unpack(bad))
       assert(e.getMessage.contains("unknown span kind"), e.getMessage)
@@ -73,6 +77,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(canon(packed) == canon(direct))
     assert(packed.size == 200)
     docs.unpersist()
+  }
+
+  test("unreadable span input is one KERNEL_ERROR row per doc, equal to the direct kernel") {
+    import spark.implicits._
+    // parquet admits each of these nulls, and the kernel cannot read them:
+    // each must cost its own doc a failure row, never the job
+    val docs = Seq(
+      Doc("null-text", Seq(Span("text", null, "", 0))),
+      Doc("null-media-ref", Seq(Span("text", "# Title", "", 0), Span("media", "", null, 1))),
+      Doc("null-element", Seq(Span("text", "# Title", "", 0), null)))
+    val direct = docs.map(d => Extract.extractDoc(d))
+    direct.foreach { r =>
+      assert(r.failure_code == FailureCodes.KernelError && !r.success && r.spans.isEmpty,
+        s"${r.doc_id}: $r")
+    }
+    val piped = ExtractionPipeline.extract(docs.toDS(),
+      ExtractionPipeline.Config(numPartitions = 2)).collect().toSeq
+    assert(canon(piped) == canon(direct))
   }
 
   test("salted repartition occupies every partition with balanced load " +
