@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Benchmark driver. Two phases, one JSON line on stdout:
   *
   *  1. **Scaling** (BASELINE.json contract): the identical extraction job —
-  *     same materialized parquet corpus, same partition count — at
+  *     same in-pipeline synthetic corpus, same partition count — at
   *     `local[N]` and `local[4N]` (default N=2: see the DRAM-ceiling note
   *     in BASELINE.md), each level in its OWN child JVM
   *     with `-XX:ActiveProcessorCount=N` so GC/JIT/common-pool threads are
@@ -35,8 +35,7 @@ object Bench {
     * ratio's denominator share, understating true engine scaling — and on
     * a real cluster the same job is long enough that the barrier
     * amortizes away. The analytics battery keeps AQE on (its joins
-    * genuinely benefit from runtime re-planning and skew handling).
-    * SPARK_GRAFT_AQE overrides either default. */
+    * genuinely benefit from runtime re-planning and skew handling). */
   private[graft] def session(cpus: Int, app: String,
                              aqeDefault: String = "true"): SparkSession = {
     val s = SparkSession.builder()
@@ -51,13 +50,10 @@ object Bench {
       // — CPU is the resource that scales with cores, the bus is not, so
       // the trade directly improves multi-core scaling; bigger file buffers
       // cut syscall/page-fault churn on the same path
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"))
-      .config("spark.io.compression.zstd.level",
-        sys.env.getOrElse("SPARK_GRAFT_ZSTD_LEVEL", "1"))
+      .config("spark.io.compression.codec", "zstd")
+      .config("spark.io.compression.zstd.level", "1")
       .config("spark.shuffle.file.buffer", "256k")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", aqeDefault))
+      .config("spark.sql.adaptive.enabled", aqeDefault)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // keep AQE active INSIDE cached plans: by default Spark compiles the
       // plan under an InMemoryRelation without AQE (so the cache's output
@@ -97,8 +93,7 @@ object Bench {
     * level a faithful N-core machine. The two levels get DISJOINT core
     * sets when the box is big enough, so the momentarily-idle JVM cannot
     * perturb the measuring one. */
-  private final class LevelWorker(level: Int, pinFrom: Int, corpus: String,
-                                  parts: Int, fusedArg: Long) {
+  private final class LevelWorker(level: Int, pinFrom: Int, docs: Long, parts: Int) {
     private val javaBin = s"${System.getProperty("java.home")}/bin/java"
     // resolve taskset from PATH, not a hardcoded location — silently
     // unpinned levels would quietly inflate the low-level throughput ~8%
@@ -116,7 +111,7 @@ object Bench {
       // bigger regions keep them out of the humongous-fragmentation path
       "-Dspark.ui.enabled=false") ++ addOpens ++ Seq(
       "-cp", System.getProperty("java.class.path"),
-      "graft.BenchWorker", level.toString, corpus, parts.toString, fusedArg.toString)
+      "graft.BenchWorker", level.toString, docs.toString, parts.toString)
     private val pb = new ProcessBuilder(cmd: _*)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     private val proc = pb.start()
@@ -173,21 +168,7 @@ object Bench {
     // slows the LOW level 17% on pure per-task overhead — which would
     // inflate the efficiency ratio for free; the throughput-optimal config
     // is the honest one, so 64 stays.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS", (nHi * 8).toString).toInt
-
-    // materialize the corpus once (both levels read identical bytes);
-    // fused mode (default) generates in-pipeline instead and needs no files
-    val fused = sys.env.get("SPARK_GRAFT_BENCH_FUSED").forall(_ != "0")
-    val corpus = s"/tmp/graft_bench_corpus_$benchDocs"
-    if (!fused &&
-        !java.nio.file.Files.exists(java.nio.file.Paths.get(corpus, "_SUCCESS"))) {
-      val s = session(32, "graft-bench-gen")
-      ExtractionPipeline.synthDocs(s, benchDocs, parallelism = parts)
-        .write.mode("overwrite").parquet(corpus)
-      s.stop()
-    }
-
-    val fusedArg = if (fused) benchDocs else 0L
+    val parts = nHi * 8
     val tScale0 = System.nanoTime()
 
     // ---- phase 1: scaling, measured as INTERLEAVED PASS-PAIRS ----
@@ -231,8 +212,8 @@ object Bench {
       }
     if (!skipScaling) {
       val pinHi = if (nLo + nHi <= Runtime.getRuntime.availableProcessors()) nLo else 0
-      val loW = new LevelWorker(nLo, 0, corpus, parts, fusedArg)
-      val hiW = new LevelWorker(nHi, pinHi, corpus, parts, fusedArg)
+      val loW = new LevelWorker(nLo, 0, benchDocs, parts)
+      val hiW = new LevelWorker(nHi, pinHi, benchDocs, parts)
       try {
         // 9 pairs: per-level minima over 9 interleaved passes tolerate
         // several noise-hit passes (measured pass spread on this sandbox is
@@ -245,7 +226,7 @@ object Bench {
         // timeout — a bounded record with a couple of noise pairs beats a
         // killed run with none. 9 planned pairs cost ~360 s incl. warmups;
         // the cap only bites when noise already forced extras.
-        val maxScaleSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_SCALE_SEC", "420").toInt
+        val maxScaleSec = 420
         (1 to 2).foreach { _ => loW.warmup(); hiW.warmup() } // C2 compilation
         var i = 0
         while ((i < passes || validIdx.size < passes) && i < passes + maxExtra &&
@@ -389,21 +370,18 @@ object Bench {
   * `pass` (timed pass → "PASS wall=.. pages=.. docs=.. spans=.."),
   * `quit`. Each pass rebuilds the Dataset from scratch — re-collecting a
   * cached DataFrame would let AQE reuse the already-materialized shuffle
-  * stages and silently skip the generate+shuffle work being measured. */
+  * stages and silently skip the generate+shuffle work being measured.
+  * Args: `<level> <docs> <parts>`; the corpus is generated in-pipeline
+  * (`ExtractionPipeline.synthDocs`), so both levels see identical docs. */
 object BenchWorker {
   def main(args: Array[String]): Unit = {
-    val Array(levelS, corpus, partsS, fusedS) = args
+    val Array(levelS, docsS, partsS) = args
     val level = levelS.toInt
     val parts = partsS.toInt
-    val fusedDocs = Option(fusedS.toLong).filter(_ > 0)
     val spark = Bench.session(level, s"graft-bench-l$level", aqeDefault = "false")
 
     def onePass(): (Double, Long, Long, Long) = {
-      val docs = fusedDocs match {
-        case Some(n) => ExtractionPipeline.synthDocs(spark, n, parallelism = parts)
-        case None    => spark.read.parquet(corpus).as[graft.model.Doc](
-          org.apache.spark.sql.Encoders.product[graft.model.Doc])
-      }
+      val docs = ExtractionPipeline.synthDocs(spark, docsS.toLong, parallelism = parts)
       val t0 = System.nanoTime()
       val row = ExtractionPipeline.extract(docs,
         ExtractionPipeline.Config(numPartitions = parts))

@@ -105,14 +105,13 @@ object ExtractionPipeline {
     * most keys × codes rows) are coalesced into one partition, which the
     * fold's distribution accepts as is: one exchange in all, and its reduce
     * is a single task, not `spark.sql.shuffle.partitions` of them.
-    * `success` may be the boolean column or the string `success=`
-    * partition directory of `DocSources.writeResults`. wall_ms is the summed kernel time — in
-    * local mode task wall clock ≈ kernel time; at cluster scale attach a
-    * SparkListener for stage-level wall times. */
+    * wall_ms is the summed kernel time — in local mode task wall clock ≈
+    * kernel time; at cluster scale attach a SparkListener for stage-level
+    * wall times. */
   private[pipeline] def rollup(results: Dataset[_], key: String): DataFrame =
     results.groupBy(col(key), col("failure_code"))
       .agg(count(lit(1)).as("n"), sum("n_pages").as("pages"), sum("n_spans").as("spans"),
-        count_if(not(col("success").cast("boolean"))).as("failures"),
+        count_if(not(col("success"))).as("failures"),
         sum("kernel_nanos").as("nanos"), min("doc_id").as("id_min"), max("doc_id").as("id_max"))
       .coalesce(1)
       .groupBy(col(key))

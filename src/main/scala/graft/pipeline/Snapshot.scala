@@ -17,13 +17,15 @@ import scala.jdk.CollectionConverters._
   * realized the way Iceberg realizes them internally: immutable data files
   * plus an atomically-committed JSON manifest listing completed work units.
   * The commit unit is a **doc_id hash bucket** (`pmod(hash(doc_id), B)`):
-  *  - output parquet is written under `data/bucket=<b>/` per bucket group;
-  *  - after each group commits, `_snapshot/manifest-<k>.json` records the
+  *  - commit `k`'s bucket group is written under
+  *    `data/snapshot=<k>/bucket=<b>/`;
+  *  - after the group is written, `_snapshot/manifest-<k>.json` records the
   *    completed buckets with lineage (docs/pages/spans/failures/wall_ms);
   *  - manifests are written to a temp file and atomically renamed — a
   *    killed run leaves either a complete manifest or none;
-  *  - resume = read manifests, skip completed buckets; re-running a
-  *    partially-written bucket overwrites its directory (idempotent).
+  *  - resume = read manifests, skip completed buckets; the retry reuses
+  *    the first uncommitted id `k` and overwrites the whole `snapshot=<k>`
+  *    directory a crash left behind (idempotent).
   * At warehouse scale the input table would itself be bucketed by
   * `bucket(doc_id)` so each group prunes at the storage layer; here the
   * filter is evaluated on the scan (documented tradeoff).

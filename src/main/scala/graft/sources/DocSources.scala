@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *    source as opaque bytes + path metadata (the clean-room stand-in for
   *    the PDF/image rasterizer front door).
   *  - S3: corpus tables are parquet reads (`readDocs`).
-  *  - S4/S5: result sinks — parquet partitioned by success for the batch
-  *    results, markdown-ish text per doc (the reference's save_result
+  *  - S4/S5: result sinks — flat parquet of the `DocResult` schema for the
+  *    batch results, markdown-ish text per doc (the reference's save_result
   *    shape, client.py:487-511), JSON metrics.
   */
 object DocSources {
@@ -87,11 +87,13 @@ object DocSources {
     dir.getAbsolutePath
   }
 
-  /** S5: batch-result parquet sink, laid out for failure triage. */
+  /** S5: batch-result parquet sink: the `DocResult` schema in one flat
+    * directory, `success` an ordinary boolean column. Failure triage is a
+    * pushed-down `success = false` filter on its row-group statistics; a
+    * `partitionBy` here would sort whole rows, spans included, before the
+    * write, for a directory layout no reader prunes on. */
   def writeResults(results: Dataset[DocResult], outDir: String): Unit =
-    results.write.mode(SaveMode.Overwrite)
-      .partitionBy("success")
-      .parquet(outDir)
+    results.write.mode(SaveMode.Overwrite).parquet(outDir)
 
   /** S5: per-doc markdown text sink — one line per span, reading order,
     * mirroring the reference's OCR-text markdown dump. */

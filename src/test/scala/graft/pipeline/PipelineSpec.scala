@@ -191,6 +191,36 @@ class PipelineSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
+  test("a crash between a commit's data write and its manifest is invisible, " +
+    "and the resume equals a cold run") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-crash").toString
+    val coldDir = Files.createTempDirectory("graft-cold").toString
+    val docs = ExtractionPipeline.synthDocs(spark, 100, seed = 5, parallelism = 4).cache()
+    val cfg = ExtractionPipeline.Config(numPartitions = 4)
+    Snapshot.run(docs, coldDir, cfg, nBuckets = 8, bucketsPerCommit = 8)
+    Snapshot.run(docs, dir, cfg, nBuckets = 8, bucketsPerCommit = 2, maxCommits = 1)
+    // the state a crash leaves after commit 1's parquet write and before its
+    // manifest rename: data under snapshot=1, no manifest-1.json
+    val committed = Paths.get(dir, "data", "snapshot=0")
+    val orphan = Paths.get(dir, "data", "snapshot=1")
+    val walk = Files.walk(committed)
+    try walk.iterator().asScala.foreach(p =>
+      Files.copy(p, orphan.resolve(committed.relativize(p).toString)))
+    finally walk.close()
+    assert(canon(Snapshot.readResults(spark, dir).collect().toSeq) ==
+      canon(Snapshot.readAt(spark, dir, 0).collect().toSeq))
+
+    // the retry reuses the uncommitted id 1 and overwrites snapshot=1
+    Snapshot.run(docs, dir, cfg, nBuckets = 8, bucketsPerCommit = 2)
+    val resumed = canon(Snapshot.readResults(spark, dir).collect().toSeq)
+    assert(resumed == canon(Snapshot.readResults(spark, coldDir).collect().toSeq))
+    assert(resumed.map(_._1).distinct.size == 100 && resumed.size == 100)
+    assert(Snapshot.snapshots(dir).flatMap(_._2).map(_.bucket).sorted == (0 until 8))
+    docs.unpersist()
+  }
+
   test("markdown sink writes a doc_id header, then one line per span") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-md").toString
