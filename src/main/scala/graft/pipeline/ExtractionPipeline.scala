@@ -3,17 +3,23 @@ package graft.pipeline
 import graft.corpus.Synth
 import graft.kernel.Extract
 import graft.model._
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The distributed extraction job: `Dataset[Doc]` → `Dataset[DocResult]`.
   *
   * Scale design (north rule: partitioning/shuffle/skew explicit, 10^12 docs):
-  *  - **Salted repartition** by the full-range `hash(doc_id) + salt` ahead
-  *    of the kernel so hot key ranges cannot pile into one task (the reference's
+  *  - **Salted repartition** into `numPartitions` (P) exchange partitions
+  *    by the full-range `hash(doc_id) ^ salt` ahead of the kernel, so hot
+  *    key ranges cannot pile into one partition (the reference's
   *    single-container 1000-image batch is exactly this failure mode,
-  *    tests/test_batch_limits.py:195-201).
+  *    tests/test_batch_limits.py:195-201). `partition_id` is the exchange
+  *    partition, in [0, P).
+  *  - **One task per core slot after the exchange**: a narrow coalesce runs
+  *    the kernel and its sink in min(P, slots) tasks, each reading
+  *    P/slots exchange partitions, so per-task fixed costs (a parquet
+  *    sink's per-file setup above all) are paid once per slot, not once
+  *    per salted partition; a sink writes min(P, slots) files per pass.
   *  - **Packed spans across the exchange**: each doc's span array is
   *    shipped as one [[SpanCodec]] blob and unpacked right before the
   *    kernel, so the salting exchange is the job's only shuffle.
@@ -26,6 +32,11 @@ import org.apache.spark.sql.functions._
   */
 object ExtractionPipeline {
 
+  /** @param numPartitions salted exchange partitions (P): the skew unit and
+    *                      the range of `partition_id`; the kernel+sink
+    *                      stage runs min(P, slots) tasks
+    * @param salt          XORed into the doc_id hash to rotate the layout
+    * @param mode          kernel routing mode */
   final case class Config(
       numPartitions: Int = 32,
       salt: Int = 0,
@@ -46,14 +57,17 @@ object ExtractionPipeline {
 
     // salted repartition: explicit skew defusal for hot doc_id ranges.
     // The partition expression is the FULL-RANGE salted hash, not
-    // pmod(hash+salt, P): repartition's HashPartitioning re-hashes the
+    // pmod(hash^salt, P): repartition's HashPartitioning re-hashes the
     // expression value to pick the partition, so a pre-bucketed [0,P)
     // expression collapses into ~(1-1/e)·P occupied partitions with up to
     // 4x-loaded hot bins (measured at P=64: 37 occupied, max load 4 —
     // idle executors + stragglers at every scale). Hashing first and
     // letting the partitioner mod the re-hashed full-range int keeps all
     // P partitions uniformly loaded; the salt still rotates the layout
-    // for skew defusal.
+    // for skew defusal. XOR, not `+`: an int add overflows under ANSI
+    // arithmetic for any hash within `salt` of Int.MaxValue, and XOR is
+    // the identity at salt 0.
+    val key = hash($"_1").bitwiseXOR(lit(cfg.salt))
     val opts = Extract.Options(mode = cfg.mode)
 
     // single scan, single shuffle: whole doc through the kernel. The
@@ -64,16 +78,19 @@ object ExtractionPipeline {
     // measured shuffle-stage wall -26% at 16 cores, -3% at 4
     // (BASELINE.md). Exact round-trip is property-tested; equality with
     // the direct kernel is pinned in PipelineSpec.
+    //
+    // The coalesce (one task per core slot, see the object doc) makes the
+    // task index no partition id: `partition_id` is HashPartitioning's own
+    // pmod(murmur3(key), P), the row's exchange partition.
     docs.map(d => (d.doc_id, SpanCodec.pack(d.spans)))
-      .repartition(cfg.numPartitions, hash($"_1") + lit(cfg.salt))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        it.map { case (id, blob) =>
-          Extract.extractDoc(graft.model.Doc(id, SpanCodec.unpack(blob)), opts)
-            .copy(partition_id = pid)
-        }
-      }
+      .repartition(cfg.numPartitions, key)
+      .select($"_1", $"_2", pmod(hash(key), lit(cfg.numPartitions)).as("_3"))
+      .as[(String, Array[Byte], Int)]
+      .coalesce(math.min(cfg.numPartitions, spark.sparkContext.defaultParallelism))
+      .mapPartitions(_.map { case (id, blob, pid) =>
+        Extract.extractDoc(graft.model.Doc(id, SpanCodec.unpack(blob)), opts)
+          .copy(partition_id = pid)
+      })
   }
 
   /** Production span dump: results exploded to one row per span with

@@ -7,7 +7,10 @@ import org.apache.spark.sql.Dataset
   * 149-239 — iterate batch sizes, record wall time, report the argmin of
   * time-per-item). In Spark the "batch size" knob is the partition count of
   * the extraction stage; the probe is a driver-side loop (inherently
-  * sequential — each candidate is a full job), the argmin a one-liner. */
+  * sequential — each candidate is a full job), the argmin a one-liner.
+  * The kernel stage runs min(P, slots) tasks whatever P is, so a candidate
+  * P varies only the salted exchange's granularity, not the task count;
+  * and the probe times `count()`, not a pass into a sink. */
 object Tuning {
 
   final case class ProbeResult(numPartitions: Int, wallSec: Double,

@@ -96,6 +96,41 @@ class PlanSpec extends AnyFunSuite {
     finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  /** P = 32 salted exchange partitions on the local[4] session: the one
+    * exchange keeps all 32, the kernel and the sink run in 4 tasks (one
+    * per core slot), and `partition_id` is still each row's real exchange
+    * partition, HashPartitioning's pmod(murmur3(hash(doc_id) ^ salt), P). */
+  test("extraction at P = 32 shuffles into 32 partitions and runs 4 kernel+sink tasks") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions._
+    val (parts, salt) = (32, 77)
+    val slots = spark.sparkContext.defaultParallelism
+    assert(slots == 4)
+    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 5, parallelism = 4)
+    val results = ExtractionPipeline.extract(docs,
+      ExtractionPipeline.Config(numPartitions = parts, salt = salt))
+    val plan = staticPlan(results)
+    val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"expected the salting exchange only:\n$plan")
+    assert(exchanges.head.numPartitions == parts)
+    assert(plan.execute().getNumPartitions == math.min(parts, slots))
+
+    // the row each doc occupies in the exchange's output is its partition_id
+    val exchanged = exchanges.head.execute()
+      .mapPartitionsWithIndex((i, rows) => rows.map(r => r.getUTF8String(0).toString -> i))
+      .collect().toMap
+    val rows = results.collect()
+    assert(rows.length == 200 && exchanged.size == 200)
+    rows.foreach(r => assert(r.partition_id == exchanged(r.doc_id), r.doc_id))
+    assert(results.where(col("partition_id") =!=
+      pmod(hash(hash(col("doc_id")).bitwiseXOR(lit(salt))), lit(parts))).isEmpty)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-slots").toString
+    graft.sources.DocSources.writeResults(results, dir)
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length == math.min(parts, slots), files.map(_.getName).mkString(", "))
+  }
+
   test("x3 rollup is a column aggregate: no MapGroups, no exchange carries spans") {
     import org.apache.spark.sql.execution.MapGroupsExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike

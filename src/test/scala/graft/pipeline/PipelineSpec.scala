@@ -23,7 +23,13 @@ class PipelineSpec extends AnyFunSuite {
       ExtractionPipeline.Config(numPartitions = 3, salt = 0)).collect().toSeq
     val b = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 11, salt = 1234)).collect().toSeq
+    // at this salt an added (not XORed) key overflows under ANSI
+    // arithmetic for about half of these docs
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val c = ExtractionPipeline.extract(docs,
+      ExtractionPipeline.Config(numPartitions = 8, salt = Int.MaxValue)).collect().toSeq
     assert(canon(a) == canon(b))
+    assert(canon(c) == canon(a))
     assert(a.size == 120)
     docs.unpersist()
   }
