@@ -19,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   * `--partitions P` (default: 4 × core slots) is the number of salted
   * exchange partitions, the skew unit and the range of `partition_id`. The
   * kernel and the sink run min(P, slots) tasks, so `extract` writes
-  * min(P, slots) result files and each `resumable` commit at most that many
-  * per bucket. For `synth` it is the generator's task count.
+  * min(P, slots) result files and `resumable` at most that many per
+  * commit. For `synth` it is the generator's task count.
   *
   * Flags are checked before the session is built: an unknown flag, a flag
   * without a value, a non-numeric count or a missing required flag fails

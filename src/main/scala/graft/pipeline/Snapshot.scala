@@ -1,11 +1,12 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.model.{Doc, DocResult}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import graft.sources.DocSources
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -17,8 +18,8 @@ import scala.jdk.CollectionConverters._
   * realized the way Iceberg realizes them internally: immutable data files
   * plus an atomically-committed JSON manifest listing completed work units.
   * The commit unit is a **doc_id hash bucket** (`pmod(hash(doc_id), B)`):
-  *  - commit `k`'s bucket group is written under
-  *    `data/snapshot=<k>/bucket=<b>/`;
+  *  - commit `k` writes its bucket group's results with
+  *    `DocSources.writeResults`, one flat directory `data/snapshot=<k>/`;
   *  - after the group is written, `_snapshot/manifest-<k>.json` records the
   *    completed buckets with lineage (docs/pages/spans/failures/wall_ms);
   *  - manifests are written to a temp file and atomically renamed — a
@@ -35,11 +36,15 @@ import scala.jdk.CollectionConverters._
   */
 object Snapshot {
 
-  private val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   final case class BucketLineage(
       bucket: Int, n_docs: Long, n_pages: Long, n_spans: Long,
       n_failures: Long, wall_ms: Long)
+
+  /** One `manifest-<snapshot_id>.json`, written by `run` and read by
+    * [[snapshots]] only. */
+  private final case class Manifest(snapshot_id: Long, buckets: Seq[BucketLineage])
 
   def manifestDir(outDir: String): Path = Paths.get(outDir, "_snapshot")
 
@@ -55,35 +60,15 @@ object Snapshot {
   }
 
   def completedBuckets(outDir: String): Set[Int] =
-    manifestFiles(outDir).flatMap { p =>
-      val root = mapper.readTree(Files.readAllBytes(p))
-      root.get("buckets").elements().asScala.map(_.get("bucket").asInt())
-    }.toSet
+    snapshots(outDir).flatMap(_._2.map(_.bucket)).toSet
 
-  private def nextManifestId(outDir: String): Int = {
-    val ids = manifestFiles(outDir).map(_.getFileName.toString)
-      .map(_.stripPrefix("manifest-").stripSuffix(".json").toInt)
-    if (ids.isEmpty) 0 else ids.max + 1
-  }
-
-  private def commitManifest(outDir: String, snapshotId: Long,
-                             lineage: Seq[BucketLineage]): Unit = {
+  private def commitManifest(outDir: String, manifest: Manifest): Unit = {
     val dir = manifestDir(outDir)
     Files.createDirectories(dir)
-    val node = mapper.createObjectNode()
-    node.put("snapshot_id", snapshotId)
-    val arr = node.putArray("buckets")
-    lineage.foreach { l =>
-      val b = arr.addObject()
-      b.put("bucket", l.bucket); b.put("n_docs", l.n_docs)
-      b.put("n_pages", l.n_pages); b.put("n_spans", l.n_spans)
-      b.put("n_failures", l.n_failures); b.put("wall_ms", l.wall_ms)
-    }
-    val tmp = dir.resolve(s".manifest-$snapshotId.tmp")
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(node).getBytes(StandardCharsets.UTF_8))
+    val tmp = dir.resolve(s".manifest-${manifest.snapshot_id}.tmp")
+    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(manifest))
     // atomic rename = the commit point
-    Files.move(tmp, dir.resolve(s"manifest-$snapshotId.json"),
+    Files.move(tmp, dir.resolve(s"manifest-${manifest.snapshot_id}.json"),
       StandardCopyOption.ATOMIC_MOVE)
   }
 
@@ -102,27 +87,23 @@ object Snapshot {
           maxCommits: Int = -1): RunReport = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val done = completedBuckets(outDir)
-    val todo = (0 until nBuckets).filterNot(done.contains)
-    val groups = todo.grouped(bucketsPerCommit).toSeq
+    val bucket = pmod(hash(col("doc_id")), lit(nBuckets))
+    val log = snapshots(outDir)
+    val done = log.flatMap(_._2.map(_.bucket)).toSet
+    val groups = (0 until nBuckets).filterNot(done.contains).grouped(bucketsPerCommit).toSeq
     val limited = if (maxCommits >= 0) groups.take(maxCommits) else groups
-    var snapshotId = nextManifestId(outDir).toLong
-    limited.foreach { bs =>
-      val subset = docs
-        .filter(pmod(hash($"doc_id"), lit(nBuckets)).isin(bs.map(Integer.valueOf): _*))
-        .as[Doc]
-      val results = ExtractionPipeline.extract(subset, cfg)
-        .withColumn("bucket", pmod(hash($"doc_id"), lit(nBuckets)))
-      results.write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$outDir/data/snapshot=$snapshotId")
-      // lineage per bucket from the written data's scalar columns
+    val firstId = log.lastOption.fold(0L)(_._1 + 1)
+    limited.zipWithIndex.foreach { case (bs, i) =>
+      val k = firstId + i
+      val dir = s"$outDir/data/snapshot=$k"
+      DocSources.writeResults(ExtractionPipeline.extract(docs.filter(bucket.isin(bs: _*)), cfg), dir)
+      // lineage describes what is durable: the written directory's scalar
+      // columns, re-read
       val lineage = ExtractionPipeline.rollup(
-          spark.read.parquet(s"$outDir/data/snapshot=$snapshotId"), "bucket")
+          spark.read.parquet(dir).withColumn("bucket", bucket), "bucket")
         .select("bucket", "n_docs", "n_pages", "n_spans", "n_failures", "wall_ms")
         .as[BucketLineage].collect().toSeq
-      commitManifest(outDir, snapshotId, lineage)
-      snapshotId += 1
+      commitManifest(outDir, Manifest(k, lineage))
     }
     RunReport(limited.flatten, done.toSeq.sorted)
   }
@@ -157,17 +138,8 @@ object Snapshot {
 
   /** The manifest log: committed snapshot ids (ascending) with their
     * per-bucket lineage — the audit surface for time travel and resume. */
-  def snapshots(outDir: String): Seq[(Long, Seq[BucketLineage])] = {
-    manifestFiles(outDir).iterator
-      .map { p =>
-        val root = mapper.readTree(Files.readAllBytes(p))
-        val id = root.get("snapshot_id").asLong()
-        val lineage = root.get("buckets").elements().asScala.map { b =>
-          BucketLineage(b.get("bucket").asInt(), b.get("n_docs").asLong(),
-            b.get("n_pages").asLong(), b.get("n_spans").asLong(),
-            b.get("n_failures").asLong(), b.get("wall_ms").asLong())
-        }.toSeq
-        (id, lineage)
-      }.toSeq.sortBy(_._1)
-  }
+  def snapshots(outDir: String): Seq[(Long, Seq[BucketLineage])] =
+    manifestFiles(outDir)
+      .map(p => mapper.readValue(p.toFile, classOf[Manifest]))
+      .map(m => (m.snapshot_id, m.buckets)).sortBy(_._1)
 }

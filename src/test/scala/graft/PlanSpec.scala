@@ -164,11 +164,7 @@ class PlanSpec extends AnyFunSuite {
     * the rows read back as `DocResult`s equal the written ones, `success`
     * the boolean column it is in memory. */
   test("metrics over a writeResults directory scan no spans and equal in-memory metrics") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SortExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-metrics").toString
     // the synth slice's only failure code is warn-level TRUNCATED: an empty
@@ -177,29 +173,12 @@ class PlanSpec extends AnyFunSuite {
       .union(Seq(graft.model.Doc("empty-doc", Seq.empty)).toDS())
     val results = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 6)).cache()
-    // the write runs under AQE: walk its query stages for the command
-    val aqe = new AdaptiveSparkPlanHelper {}
-    val writePlan = scala.concurrent.Promise[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "command" && aqe.find(qe.executedPlan) {
-              case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
-                c.outputPath.toString.endsWith(dir)
-              case _ => false
-            }.isDefined) writePlan.trySuccess(qe.executedPlan): Unit
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // the listener bus delivers asynchronously: unregister once it has
-    spark.listenerManager.register(listener)
-    val plan = try {
+    val (sorts, plan) = SparkTestSession.writeSorts(dir) {
       graft.sources.DocSources.writeResults(results, dir)
-      scala.concurrent.Await.result(writePlan.future, scala.concurrent.duration.Duration(30, "s"))
-    } finally spark.listenerManager.unregister(listener)
-    val sorts = aqe.collect(plan) { case s: SortExec => s }
+    }
     assert(sorts.isEmpty, s"the results write sorts its rows:\n$plan")
-    val subdirs = new java.io.File(dir).listFiles().filter(f =>
-      f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    assert(subdirs.isEmpty, s"writeResults is not flat: ${subdirs.map(_.getName).mkString(", ")}")
+    val subdirs = SparkTestSession.visibleSubdirs(dir)
+    assert(subdirs.isEmpty, s"writeResults is not flat: ${subdirs.mkString(", ")}")
     val written = results.collect().sortBy(_.doc_id).toSeq
     assert(written.exists(!_.success))
     assert(spark.read.parquet(dir).as[graft.model.DocResult].collect().sortBy(_.doc_id).toSeq ==

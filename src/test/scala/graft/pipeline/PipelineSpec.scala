@@ -227,6 +227,102 @@ class PipelineSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
+  /** A commit is one `DocSources.writeResults` directory: its write sorts
+    * nothing, `data/snapshot=<k>/` holds part files only, at most one per
+    * core slot, and `readAt(k)` reads back exactly the committed rows. */
+  test("a snapshot commit is one flat, unsorted results directory that readAt reads back") {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-flat").toString
+    val docs = ExtractionPipeline.synthDocs(spark, 100, seed = 9, parallelism = 4).cache()
+    val cfg = ExtractionPipeline.Config(numPartitions = 8)
+    val commit0 = s"$dir/data/snapshot=0"
+    val (sorts, plan) = SparkTestSession.writeSorts(commit0) {
+      Snapshot.run(docs, dir, cfg, nBuckets = 8, bucketsPerCommit = 4): Unit
+    }
+    assert(sorts.isEmpty, s"the commit write sorts its rows:\n$plan")
+    val subdirs = SparkTestSession.visibleSubdirs(commit0)
+    assert(subdirs.isEmpty, s"commit 0 is not flat: ${subdirs.mkString(", ")}")
+    val parts = new java.io.File(commit0).list().count(_.startsWith("part-"))
+    assert(parts >= 1 && parts <= math.min(cfg.numPartitions, spark.sparkContext.defaultParallelism),
+      s"$parts part files in commit 0")
+
+    val log = Snapshot.snapshots(dir)
+    assert(log.map(_._1) == Seq(0L, 1L))
+    val at0 = Snapshot.readAt(spark, dir, 0).collect().sortBy(_.doc_id).toSeq
+    assert(at0 == spark.read.parquet(commit0).as[DocResult].collect().sortBy(_.doc_id).toSeq)
+    val buckets0 = log.head._2.map(_.bucket)
+    assert(buckets0.sorted == (0 until 4))
+    val subset = docs.filter(pmod(hash(col("doc_id")), lit(8)).isin(buckets0: _*))
+    assert(canon(at0) == canon(ExtractionPipeline.extract(subset, cfg).collect().toSeq))
+    assert(at0.size.toLong == log.head._2.map(_.n_docs).sum && at0.size < 100)
+    docs.unpersist()
+  }
+
+  /** The manifest log's on-disk JSON as it has always been written (the
+    * key names and order of `{snapshot_id, buckets: [{bucket, n_docs,
+    * n_pages, n_spans, n_failures, wall_ms}]}`, pretty-printed): such a log
+    * reads back with its lineage, and a fresh commit writes the same keys. */
+  test("the manifest format is read back as written and a fresh commit keeps its keys") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-manifest").toString
+    val log = Snapshot.manifestDir(dir)
+    Files.createDirectories(log)
+    Files.writeString(log.resolve("manifest-0.json"),
+      """{
+        |  "snapshot_id" : 0,
+        |  "buckets" : [ {
+        |    "bucket" : 3,
+        |    "n_docs" : 12,
+        |    "n_pages" : 31,
+        |    "n_spans" : 140,
+        |    "n_failures" : 1,
+        |    "wall_ms" : 7
+        |  }, {
+        |    "bucket" : 0,
+        |    "n_docs" : 9,
+        |    "n_pages" : 20,
+        |    "n_spans" : 88,
+        |    "n_failures" : 0,
+        |    "wall_ms" : 4
+        |  } ]
+        |}""".stripMargin)
+    Files.writeString(log.resolve("manifest-1.json"),
+      """{
+        |  "snapshot_id" : 1,
+        |  "buckets" : [ {
+        |    "bucket" : 1,
+        |    "n_docs" : 10,
+        |    "n_pages" : 10,
+        |    "n_spans" : 50,
+        |    "n_failures" : 2,
+        |    "wall_ms" : 0
+        |  } ]
+        |}""".stripMargin)
+    Files.writeString(log.resolve(".manifest-2.tmp"), "{ torn")
+    assert(Snapshot.snapshots(dir) == Seq(
+      0L -> Seq(Snapshot.BucketLineage(3, 12, 31, 140, 1, 7),
+        Snapshot.BucketLineage(0, 9, 20, 88, 0, 4)),
+      1L -> Seq(Snapshot.BucketLineage(1, 10, 10, 50, 2, 0))))
+    assert(Snapshot.completedBuckets(dir) == Set(0, 1, 3))
+
+    val fresh = Files.createTempDirectory("graft-manifest").toString
+    val docs = ExtractionPipeline.synthDocs(spark, 20, seed = 13, parallelism = 2)
+    Snapshot.run(docs, fresh, ExtractionPipeline.Config(numPartitions = 2),
+      nBuckets = 2, bucketsPerCommit = 2)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def keys(dir: String): (Seq[String], Seq[Seq[String]]) = {
+      val root = mapper.readTree(Snapshot.manifestDir(dir).resolve("manifest-0.json").toFile)
+      (root.fieldNames().asScala.toSeq,
+        root.get("buckets").elements().asScala.map(_.fieldNames().asScala.toSeq).toSeq)
+    }
+    val (top, perBucket) = keys(fresh)
+    assert(top == keys(dir)._1)
+    assert(perBucket.size == 2 && perBucket.forall(_ == keys(dir)._2.head))
+    assert(Snapshot.completedBuckets(fresh) == Set(0, 1))
+  }
+
   test("markdown sink writes a doc_id header, then one line per span") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-md").toString
@@ -236,14 +332,6 @@ class PipelineSpec extends AnyFunSuite {
       Seq(DocResult("doc-7", spans, success = true, "", 3, 1, 0, 0L)).toDS(), dir)
     val lines = spark.read.text(dir).as[String].collect().toSeq
     assert(lines == Seq("doc-7", "Report", "![](synth://img/1,2,3,4)", "body"))
-  }
-
-  test("partition probe returns a best config (A9)") {
-    val docs = ExtractionPipeline.synthDocs(spark, 40, seed = 21, parallelism = 2)
-    val probes = Tuning.probePartitioning(docs, Seq(2, 4))
-    assert(probes.size == 2)
-    assert(probes.forall(_.nDocs == 40))
-    assert(Seq(2, 4).contains(Tuning.best(probes).numPartitions))
   }
 
   test("synth corpus is deterministic and heavy-tailed") {

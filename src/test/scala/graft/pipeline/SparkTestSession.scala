@@ -1,6 +1,14 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 
 /** One shared local session for all Spark-backed specs. */
 object SparkTestSession {
@@ -19,4 +27,36 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val aqe = new AdaptiveSparkPlanHelper {}
+
+  /** Runs `write` and returns the executed plan of its parquet write into
+    * `dir` with the `SortExec`s in it. The plan comes from a
+    * `QueryExecutionListener`; the write runs under AQE, so its query
+    * stages are walked for the command. */
+  def writeSorts(dir: String)(write: => Unit): (Seq[SortExec], SparkPlan) = {
+    val writePlan = Promise[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "command" && aqe.find(qe.executedPlan) {
+              case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+                c.outputPath.toString.endsWith(dir)
+              case _ => false
+            }.isDefined) writePlan.trySuccess(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the listener bus delivers asynchronously: unregister once it has
+    spark.listenerManager.register(listener)
+    val plan = try {
+      write
+      Await.result(writePlan.future, Duration(30, "s"))
+    } finally spark.listenerManager.unregister(listener)
+    (aqe.collect(plan) { case s: SortExec => s }, plan)
+  }
+
+  /** The subdirectories of `dir`, hidden `_`/`.` ones left out. */
+  def visibleSubdirs(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(_.getName)
 }
