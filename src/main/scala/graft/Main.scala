@@ -8,23 +8,23 @@ import org.apache.spark.sql.SparkSession
   *
   * {{{
   * spark-submit --class graft.Main ocrdeploymentspark.jar \
-  *   extract    --in <docs.parquet> --out <dir> [--partitions P] [--salt S] \
+  *   extract    --in <docs.parquet> --out <dir> [--partitions P] \
   *              [--mode prompt_layout_all_en]
   *   resumable  --in <docs.parquet> --out <dir> [--buckets B] [--per-commit K] \
-  *              [--partitions P] [--salt S] [--mode M]
+  *              [--partitions P] [--mode M]
   *   stream     --in <dir> --out <dir> --checkpoint <dir> [--mode M]
   *   synth      --out <dir> [--docs N] [--partitions P]
   * }}}
   *
-  * `--partitions P` (default: 4 × core slots) is the number of salted
+  * `--partitions P` (default: 4 × core slots) is the number of hash
   * exchange partitions, the skew unit and the range of `partition_id`. The
   * kernel and the sink run min(P, slots) tasks, so `extract` writes
   * min(P, slots) result files and `resumable` at most that many per
   * commit. For `synth` it is the generator's task count.
   *
   * Flags are checked before the session is built: an unknown flag, a flag
-  * without a value, a non-numeric count or a missing required flag fails
-  * at once. On a cluster the session comes from spark-submit
+  * without a value, a count that is not a number ≥ 1 or a missing required
+  * flag fails at once. On a cluster the session comes from spark-submit
   * (master/executors from the submit conf); `local[32]` is only the
   * sandbox fallback.
   */
@@ -33,13 +33,13 @@ object Main {
   private final case class Subcommand(required: Set[String], optional: Set[String])
 
   private val Subcommands: Map[String, Subcommand] = Map(
-    "extract" -> Subcommand(Set("in", "out"), Set("partitions", "salt", "mode")),
+    "extract" -> Subcommand(Set("in", "out"), Set("partitions", "mode")),
     "resumable" -> Subcommand(Set("in", "out"),
-      Set("buckets", "per-commit", "partitions", "salt", "mode")),
+      Set("buckets", "per-commit", "partitions", "mode")),
     "stream" -> Subcommand(Set("in", "out", "checkpoint"), Set("mode")),
     "synth" -> Subcommand(Set("out"), Set("docs", "partitions")))
 
-  private val NumericFlags = Set("partitions", "salt", "buckets", "per-commit", "docs")
+  private val NumericFlags = Set("partitions", "buckets", "per-commit", "docs")
 
   /** A checked command line: the subcommand and its `--name value` flags. */
   private[graft] final case class Args(cmd: String, flags: Map[String, String]) {
@@ -65,8 +65,8 @@ object Main {
           tail match {
             case v :: more if !v.startsWith("--") =>
               require(!NumericFlags(name) ||
-                v.toLongOption.exists(n => name == "docs" || n.isValidInt),
-                s"flag $k needs a number, got '$v'")
+                v.toLongOption.exists(n => n >= 1 && (name == "docs" || n.isValidInt)),
+                s"flag $k needs a number >= 1, got '$v'")
               flags(more, acc + (name -> v))
             case _ => throw new IllegalArgumentException(s"flag $k needs a value")
           }
@@ -94,7 +94,6 @@ object Main {
     val cfg = ExtractionPipeline.Config(
       numPartitions = a.opt("partitions").map(_.toInt)
         .getOrElse(spark.sparkContext.defaultParallelism * 4),
-      salt = a.opt("salt").map(_.toInt).getOrElse(0),
       mode = a.opt("mode").getOrElse(graft.kernel.Router.LayoutAll))
 
     a.cmd match {

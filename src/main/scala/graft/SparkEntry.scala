@@ -258,8 +258,7 @@ object SparkEntry {
         .orderBy("p_type")
     }),
     "q14_hourly_events" -> ((s, d) => {
-      // event-time tumbling window (epoch-aligned, UTC session TZ) — the
-      // batch twin of StreamingExtract.failureRates' windowed shape;
+      // event-time tumbling window (epoch-aligned, UTC session TZ);
       // window(ts, '1 hour').start ≡ DuckDB date_trunc('hour', ts)
       t(s, d, "events")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))

@@ -68,9 +68,8 @@ object Fixtures {
     }.toMap
   }
 
-  /** Double-encoded ground truth + metadata for the scoring pipeline
+  /** Double-encoded ground truth for the scoring pipeline
     * (benchmark/data/example_000_*; unwrap-twice semantics
     * run_batch_benchmark.py:73-79). */
   lazy val ex000TruthJsonRaw: String = resource("ex000_truth.json")
-  lazy val ex000MetadataRaw: String = resource("ex000_metadata.json")
 }

@@ -13,7 +13,7 @@ import graft.model.{Doc, Kinds, Span}
   * max_tokens — modal_gpu.py's real-world failure modes), HTML pages with
   * boilerplate chrome, markdown pages, plus media spans (some chart-shaped
   * with a deterministic `?md=` data payload). Span counts are heavy-tailed
-  * so skew handling (salting + oversized-doc defusal) is actually exercised.
+  * so skew handling (the hash exchange) is actually exercised.
   */
 object Synth {
 

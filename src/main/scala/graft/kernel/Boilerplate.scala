@@ -156,28 +156,23 @@ object Boilerplate {
     def linkDensity: Double = if (textLen == 0) 1.0 else linkTextLen.toDouble / textLen
   }
 
-  def stats(node: Node): Stats = statsMemo(node, null)
-
-  /** Subtree stats with optional memo: the extractor walks every level of
-    * the tree and asks for stats at each tag, which is O(depth·n) without
-    * memoization (measured on deep pages). */
-  private def statsMemo(node: Node,
-                        memo: java.util.IdentityHashMap[Node, Stats]): Stats = {
-    if (memo != null) {
-      val hit = memo.get(node)
-      if (hit != null) return hit
-    }
+  /** Subtree stats, memoized: the extractor walks every level of the tree
+    * and asks for stats at each tag, which is O(depth·n) without the memo
+    * (measured on deep pages). */
+  private def stats(node: Node, memo: java.util.IdentityHashMap[Node, Stats]): Stats = {
+    val hit = memo.get(node)
+    if (hit != null) return hit
     val out = node match {
       case TextNode(t) => Stats(trimmedLength(t), 0, 0)
       case Tag(name, _, children) =>
         val base = children.foldLeft(Stats(0, 0, 1)) { (acc, ch) =>
-          val s = statsMemo(ch, memo)
+          val s = stats(ch, memo)
           Stats(acc.textLen + s.textLen, acc.linkTextLen + s.linkTextLen,
             acc.tagCount + s.tagCount)
         }
         if (name == "a") base.copy(linkTextLen = base.textLen) else base
     }
-    if (memo != null) memo.put(node, out)
+    memo.put(node, out)
     out
   }
 
@@ -186,16 +181,15 @@ object Boilerplate {
   /** Is this subtree boilerplate? Chrome tags, chrome-classed containers, and
     * link-dense low-text blocks are dropped; main/article always kept. The
     * bare text-density floor applies only to generic containers — semantic
-    * content tags (ul, table, p, h*) are legitimate even when terse. */
-  def isBoilerplate(t: Tag): Boolean = isBoilerplateMemo(t, null)
-
-  private def isBoilerplateMemo(
+    * content tags (ul, table, p, h*) are legitimate even when terse.
+    * `memo` caches subtree [[Stats]] across the calls of one page walk. */
+  private[kernel] def isBoilerplate(
       t: Tag, memo: java.util.IdentityHashMap[Node, Stats]): Boolean = {
     if (t.name == "main" || t.name == "article") return false
     if (chromeTags.contains(t.name)) return true
     val cls = t.attrs.getOrElse("class", "") + " " + t.attrs.getOrElse("id", "")
     if (chromeClassRe.findFirstIn(cls).isDefined) return true
-    val s = statsMemo(t, memo)
+    val s = stats(t, memo)
     (s.linkDensity > 0.5 && s.textLen < 200) ||
       (genericContainers.contains(t.name) &&
         s.textLen < 25 && s.density < 10 && s.textLen > 0)
@@ -246,7 +240,7 @@ object Boilerplate {
         val s = wsRun.matcher(t).replaceAll(" ").trim
         if (s.nonEmpty) emit("Text", s)
       case tag @ Tag(name, attrs, children) =>
-        if (isBoilerplateMemo(tag, statsCache) && name != "header" && name != "footer") return
+        if (isBoilerplate(tag, statsCache) && name != "header" && name != "footer") return
         name match {
           case "header" =>
             val txt = innerText(tag)

@@ -136,13 +136,6 @@ object Multimodal {
           col("frame_idx").cast("string")).cast("binary")))
   }
 
-  /** Image formats this JVM can actually encode (JDK17 ImageIO: png, jpeg,
-    * bmp, gif, tiff, wbmp — NO webp; the reference's WebP path,
-    * client.py:113-123, is represented by the format tag only and noted as
-    * a delta in COVERAGE.md). */
-  def supportedWriteFormats: Set[String] =
-    javax.imageio.ImageIO.getWriterFormatNames.map(_.toLowerCase).toSet
-
   /** Real JPEG re-encode at an explicit quality factor — the reference's
     * JPEG q85 step (client.py:62-66) done with ImageIO's writer params
     * instead of PIL. */

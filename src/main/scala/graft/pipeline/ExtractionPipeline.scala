@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 /** The distributed extraction job: `Dataset[Doc]` → `Dataset[DocResult]`.
   *
   * Scale design (north rule: partitioning/shuffle/skew explicit, 10^12 docs):
-  *  - **Salted repartition** into `numPartitions` (P) exchange partitions
-  *    by the full-range `hash(doc_id) ^ salt` ahead of the kernel, so hot
+  *  - **Hash repartition** into `numPartitions` (P) exchange partitions
+  *    by the full-range `hash(doc_id)` ahead of the kernel, so hot
   *    key ranges cannot pile into one partition (the reference's
   *    single-container 1000-image batch is exactly this failure mode,
   *    tests/test_batch_limits.py:195-201). `partition_id` is the exchange
@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   *    the kernel and its sink in min(P, slots) tasks, each reading
   *    P/slots exchange partitions, so per-task fixed costs (a parquet
   *    sink's per-file setup above all) are paid once per slot, not once
-  *    per salted partition; a sink writes min(P, slots) files per pass.
+  *    per exchange partition; a sink writes min(P, slots) files per pass.
   *  - **Packed spans across the exchange**: each doc's span array is
   *    shipped as one [[SpanCodec]] blob and unpacked right before the
-  *    kernel, so the salting exchange is the job's only shuffle.
+  *    kernel, so the hash exchange is the job's only shuffle.
   *  - **Executor-warm kernel**: the kernel is a JVM object (lazy-initialized
   *    per executor, like the reference's @modal.enter one-time model load,
   *    modal_gpu.py:92-179); `mapPartitions` amortizes any setup across the
@@ -32,14 +32,12 @@ import org.apache.spark.sql.functions._
   */
 object ExtractionPipeline {
 
-  /** @param numPartitions salted exchange partitions (P): the skew unit and
+  /** @param numPartitions hash exchange partitions (P): the skew unit and
     *                      the range of `partition_id`; the kernel+sink
     *                      stage runs min(P, slots) tasks
-    * @param salt          XORed into the doc_id hash to rotate the layout
     * @param mode          kernel routing mode */
   final case class Config(
       numPartitions: Int = 32,
-      salt: Int = 0,
       mode: String = graft.kernel.Router.LayoutAll)
 
   /** Deterministic synthetic corpus as a Dataset — embarrassingly parallel,
@@ -55,19 +53,16 @@ object ExtractionPipeline {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    // salted repartition: explicit skew defusal for hot doc_id ranges.
-    // The partition expression is the FULL-RANGE salted hash, not
-    // pmod(hash^salt, P): repartition's HashPartitioning re-hashes the
+    // hash repartition: explicit skew defusal for hot doc_id ranges.
+    // The partition expression is the FULL-RANGE hash, not
+    // pmod(hash, P): repartition's HashPartitioning re-hashes the
     // expression value to pick the partition, so a pre-bucketed [0,P)
     // expression collapses into ~(1-1/e)·P occupied partitions with up to
     // 4x-loaded hot bins (measured at P=64: 37 occupied, max load 4 —
     // idle executors + stragglers at every scale). Hashing first and
     // letting the partitioner mod the re-hashed full-range int keeps all
-    // P partitions uniformly loaded; the salt still rotates the layout
-    // for skew defusal. XOR, not `+`: an int add overflows under ANSI
-    // arithmetic for any hash within `salt` of Int.MaxValue, and XOR is
-    // the identity at salt 0.
-    val key = hash($"_1").bitwiseXOR(lit(cfg.salt))
+    // P partitions uniformly loaded.
+    val key = hash($"_1")
     val opts = Extract.Options(mode = cfg.mode)
 
     // single scan, single shuffle: whole doc through the kernel. The
@@ -100,7 +95,7 @@ object ExtractionPipeline {
     * dump is deterministic; at 100 TB a total sort of every span would be a
     * cluster-wide shuffle with no consumer. All downstream operators key on
     * doc_id, so doc-local ordering is all the pipeline ever needs.
-    * PlanSpec asserts this path has exactly one exchange (the salting one)
+    * PlanSpec asserts this path has exactly one exchange (the hash one)
     * and no range partitioning. */
   def extractSpans(docs: Dataset[Doc], cfg: Config = Config()): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession

@@ -4,11 +4,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.model.{Doc, DocResult}
 import graft.sources.DocSources
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 /** Snapshot-manifest checkpointing: resumable extraction runs with
   * per-bucket lineage (north rule: "resumable from checkpoint, snapshot
@@ -22,8 +20,11 @@ import scala.jdk.CollectionConverters._
   *    `DocSources.writeResults`, one flat directory `data/snapshot=<k>/`;
   *  - after the group is written, `_snapshot/manifest-<k>.json` records the
   *    completed buckets with lineage (docs/pages/spans/failures/wall_ms);
-  *  - manifests are written to a temp file and atomically renamed — a
-  *    killed run leaves either a complete manifest or none;
+  *  - manifests are written to a temp file and renamed (atomic on HDFS
+  *    and local file systems) — a killed run leaves either a complete
+  *    manifest or none. Like the data, they go through Hadoop's
+  *    `FileSystem` for `outDir`, so a URI `outDir` (`file:`, `hdfs://`)
+  *    keeps data and manifests in one store;
   *  - resume = read manifests, skip completed buckets; the retry reuses
   *    the first uncommitted id `k` and overwrites the whole `snapshot=<k>`
   *    directory a crash left behind (idempotent).
@@ -46,30 +47,23 @@ object Snapshot {
     * [[snapshots]] only. */
   private final case class Manifest(snapshot_id: Long, buckets: Seq[BucketLineage])
 
-  def manifestDir(outDir: String): Path = Paths.get(outDir, "_snapshot")
-
-  /** List manifest files, closing the directory stream (Files.list leaks
-    * an fd per call otherwise). */
-  private def manifestFiles(outDir: String): Seq[Path] = {
-    val dir = manifestDir(outDir)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val stream = Files.list(dir)
-    try stream.iterator().asScala
-      .filter(_.getFileName.toString.matches("manifest-\\d+\\.json")).toSeq
-    finally stream.close()
+  /** The manifest log directory and its file system: the session's Hadoop
+    * configuration resolves `outDir` exactly as the data writes do. */
+  private def manifestDir(outDir: String): (FileSystem, Path) = {
+    val dir = new Path(outDir, "_snapshot")
+    (dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration), dir)
   }
 
-  def completedBuckets(outDir: String): Set[Int] =
-    snapshots(outDir).flatMap(_._2.map(_.bucket)).toSet
-
   private def commitManifest(outDir: String, manifest: Manifest): Unit = {
-    val dir = manifestDir(outDir)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".manifest-${manifest.snapshot_id}.tmp")
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(manifest))
-    // atomic rename = the commit point
-    Files.move(tmp, dir.resolve(s"manifest-${manifest.snapshot_id}.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    val (fs, dir) = manifestDir(outDir)
+    val tmp = new Path(dir, s".manifest-${manifest.snapshot_id}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(manifest))
+    finally out.close()
+    // the rename is the commit point
+    val committed = new Path(dir, s"manifest-${manifest.snapshot_id}.json")
+    if (!fs.rename(tmp, committed))
+      throw new java.io.IOException(s"could not commit manifest $committed")
   }
 
   final case class RunReport(bucketsRun: Seq[Int], bucketsSkipped: Seq[Int])
@@ -85,6 +79,8 @@ object Snapshot {
           cfg: ExtractionPipeline.Config = ExtractionPipeline.Config(),
           nBuckets: Int = 16, bucketsPerCommit: Int = 4,
           maxCommits: Int = -1): RunReport = {
+    require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
+    require(bucketsPerCommit >= 1, s"bucketsPerCommit must be >= 1, got $bucketsPerCommit")
     val spark = docs.sparkSession
     import spark.implicits._
     val bucket = pmod(hash(col("doc_id")), lit(nBuckets))
@@ -138,8 +134,15 @@ object Snapshot {
 
   /** The manifest log: committed snapshot ids (ascending) with their
     * per-bucket lineage — the audit surface for time travel and resume. */
-  def snapshots(outDir: String): Seq[(Long, Seq[BucketLineage])] =
-    manifestFiles(outDir)
-      .map(p => mapper.readValue(p.toFile, classOf[Manifest]))
+  def snapshots(outDir: String): Seq[(Long, Seq[BucketLineage])] = {
+    val (fs, dir) = manifestDir(outDir)
+    if (!fs.exists(dir)) return Seq.empty
+    fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.matches("manifest-\\d+\\.json"))
+      .map { p =>
+        val in = fs.open(p)
+        try mapper.readValue(in: java.io.InputStream, classOf[Manifest]) finally in.close()
+      }
       .map(m => (m.snapshot_id, m.buckets)).sortBy(_._1)
+  }
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.model.Span
 
 /** Compact binary encoding for a document's span array, used ACROSS the
-  * salting exchange in [[ExtractionPipeline.extract]].
+  * hash exchange in [[ExtractionPipeline.extract]].
   *
   * Why: the shuffle ships every document's `array<struct<kind, text,
   * media_ref, offset>>`; Spark's UnsafeRow layout spends ~48 bytes of fixed

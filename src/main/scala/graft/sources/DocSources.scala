@@ -31,34 +31,6 @@ object DocSources {
       .select(col("path"), col("length"),
         col("content"), base64(col("content")).as("content_b64"))
 
-  /** S3 variant: the Doc table from JSON-lines. Schema passed explicitly —
-    * never inferSchema at scale (inference is a full sampling pass over the
-    * input just to guess what we already know). */
-  def readDocsJson(spark: SparkSession, path: String): Dataset[Doc] = {
-    import spark.implicits._
-    spark.read.schema(org.apache.spark.sql.Encoders.product[Doc].schema)
-      .json(path).as[Doc]
-  }
-
-  def writeDocsJson(docs: Dataset[Doc], path: String): Unit =
-    docs.write.mode(SaveMode.Overwrite).json(path)
-
-  /** S3 variant: CSV — no nested types, so spans travel as a JSON string
-    * column and are restored with from_json on read (schema explicit). */
-  def writeDocsCsv(docs: Dataset[Doc], path: String): Unit =
-    docs.select(col("doc_id"), to_json(col("spans")).as("spans_json"))
-      .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  def readDocsCsv(spark: SparkSession, path: String): Dataset[Doc] = {
-    import spark.implicits._
-    val spanArr = org.apache.spark.sql.Encoders.product[Doc].schema("spans").dataType
-    spark.read.option("header", "true")
-      .schema("doc_id string, spans_json string")
-      .csv(path)
-      .select(col("doc_id"), from_json(col("spans_json"), spanArr).as("spans"))
-      .as[Doc]
-  }
-
   /** S1/S2 fixture bootstrap: deterministic PNG page rasters (one per id,
     * `doc_<id>.png`, dims `(id%48+16, (id/7)%48+16)` — the formula the
     * DuckDB oracle recomputes) written once to a content-addressed tmp dir.

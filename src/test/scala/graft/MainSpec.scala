@@ -21,6 +21,8 @@ class MainSpec extends AnyFunSuite {
   test("an unknown flag fails loudly, including the removed --split-oversized") {
     val msg = rejected("extract", "--in", "i", "--out", "o", "--split-oversized")
     assert(msg.contains("unknown flag '--split-oversized'"), msg)
+    assert(rejected("resumable", "--in", "i", "--out", "o", "--salt", "3")
+      .contains("unknown flag '--salt'"))
     // a flag another subcommand knows is still unknown here
     assert(rejected("synth", "--out", "o", "--checkpoint", "c").contains("unknown flag"))
     assert(rejected("extract", "--in", "i", "--out", "o", "stray").contains("unknown flag"))
@@ -34,6 +36,11 @@ class MainSpec extends AnyFunSuite {
     assert(rejected("extract", "--in", "--out", "o").contains("--in needs a value"))
     assert(rejected("extract", "--in", "i", "--out", "o", "--partitions", "x")
       .contains("needs a number"))
+    for ((flag, v) <- Seq("buckets" -> "0", "buckets" -> "-3", "per-commit" -> "0"))
+      assert(rejected("resumable", "--in", "i", "--out", "o", s"--$flag", v)
+        .contains(s"--$flag needs a number >= 1"))
+    assert(rejected("extract", "--in", "i", "--out", "o", "--partitions", "0")
+      .contains("--partitions needs a number >= 1"))
     assert(rejected("transcode").contains("unknown subcommand"))
     assert(rejected().contains("subcommand required"))
   }

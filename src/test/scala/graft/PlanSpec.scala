@@ -58,7 +58,7 @@ class PlanSpec extends AnyFunSuite {
       "sortWithinPartitions must not add a range exchange:\n" + plan.take(1500))
     val exchanges = "ShuffleExchange|Exchange hashpartitioning".r
       .findAllIn(plan).length
-    assert(exchanges == 1, s"expected only the salting exchange, plan:\n${plan.take(1500)}")
+    assert(exchanges == 1, s"expected only the hash exchange, plan:\n${plan.take(1500)}")
   }
 
   test("q12 star join broadcasts the small dimensions") {
@@ -96,22 +96,22 @@ class PlanSpec extends AnyFunSuite {
     finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
-  /** P = 32 salted exchange partitions on the local[4] session: the one
+  /** P = 32 hash exchange partitions on the local[4] session: the one
     * exchange keeps all 32, the kernel and the sink run in 4 tasks (one
     * per core slot), and `partition_id` is still each row's real exchange
-    * partition, HashPartitioning's pmod(murmur3(hash(doc_id) ^ salt), P). */
+    * partition, HashPartitioning's pmod(murmur3(hash(doc_id)), P). */
   test("extraction at P = 32 shuffles into 32 partitions and runs 4 kernel+sink tasks") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.functions._
-    val (parts, salt) = (32, 77)
+    val parts = 32
     val slots = spark.sparkContext.defaultParallelism
     assert(slots == 4)
     val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 5, parallelism = 4)
     val results = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = parts, salt = salt))
+      ExtractionPipeline.Config(numPartitions = parts))
     val plan = staticPlan(results)
     val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size == 1, s"expected the salting exchange only:\n$plan")
+    assert(exchanges.size == 1, s"expected the hash exchange only:\n$plan")
     assert(exchanges.head.numPartitions == parts)
     assert(plan.execute().getNumPartitions == math.min(parts, slots))
 
@@ -123,7 +123,7 @@ class PlanSpec extends AnyFunSuite {
     assert(rows.length == 200 && exchanged.size == 200)
     rows.foreach(r => assert(r.partition_id == exchanged(r.doc_id), r.doc_id))
     assert(results.where(col("partition_id") =!=
-      pmod(hash(hash(col("doc_id")).bitwiseXOR(lit(salt))), lit(parts))).isEmpty)
+      pmod(hash(hash(col("doc_id"))), lit(parts))).isEmpty)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-slots").toString
     graft.sources.DocSources.writeResults(results, dir)
@@ -137,7 +137,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = staticPlan(SparkEntry.queries("x3_partition_metrics")(spark, sf))
     assert(plan.collect { case m: MapGroupsExec => m }.isEmpty, s"typed rollup in:\n$plan")
     val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size >= 2, s"salting exchange + aggregate exchanges expected:\n$plan")
+    assert(exchanges.size >= 2, s"hash exchange + aggregate exchanges expected:\n$plan")
     exchanges.foreach { e =>
       assert(!e.output.exists(_.name == "spans"), s"exchange carries spans:\n$e")
     }
@@ -154,7 +154,7 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges.size == 1, s"the fold must not shuffle again:\n$plan")
     assert(staticPlan(SparkEntry.queries("x3_partition_metrics")(spark, sf))
       .collect { case e: ShuffleExchangeLike => e }.size == 2,
-      "x3: the salting exchange and the one rollup exchange")
+      "x3: the hash exchange and the one rollup exchange")
     assert(plan.execute().getNumPartitions == 1)
     assert(metrics.collect().map(_.n_docs).sum == 40)
   }

@@ -229,11 +229,11 @@ class KernelUnitSpec extends AnyFunSuite {
     val linky = Boilerplate.parseHtml(
       """<div><a href="a">one</a> <a href="b">two</a> <a href="c">three</a></div>""")
       .children.head.asInstanceOf[Boilerplate.Tag]
-    assert(Boilerplate.isBoilerplate(linky))
+    assert(Boilerplate.isBoilerplate(linky, new java.util.IdentityHashMap()))
     val texty = Boilerplate.parseHtml(
       "<div>" + ("real content sentence. " * 20) + "<a href='x'>ref</a></div>")
       .children.head.asInstanceOf[Boilerplate.Tag]
-    assert(!Boilerplate.isBoilerplate(texty))
+    assert(!Boilerplate.isBoilerplate(texty, new java.util.IdentityHashMap()))
   }
 
   // ---- synthetic two-column pages order columns correctly ----

@@ -6,8 +6,8 @@ import graft.model.{Doc, DocResult, FailureCodes, PartitionMetric, Span}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed-correctness properties (SURVEY.md §5): extraction is
-  * partitioning-invariant and equal to the direct kernel, salting never
-  * loses or duplicates docs, and checkpoint resume ≡ cold run. */
+  * partitioning-invariant and equal to the direct kernel, the hash
+  * exchange never loses or duplicates docs, and checkpoint resume ≡ cold run. */
 class PipelineSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -20,14 +20,11 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = ExtractionPipeline.synthDocs(spark, 120, seed = 7, parallelism = 4).cache()
     val a = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 3, salt = 0)).collect().toSeq
+      ExtractionPipeline.Config(numPartitions = 3)).collect().toSeq
     val b = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 11, salt = 1234)).collect().toSeq
-    // at this salt an added (not XORed) key overflows under ANSI
-    // arithmetic for about half of these docs
-    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+      ExtractionPipeline.Config(numPartitions = 11)).collect().toSeq
     val c = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 8, salt = Int.MaxValue)).collect().toSeq
+      ExtractionPipeline.Config(numPartitions = 8)).collect().toSeq
     assert(canon(a) == canon(b))
     assert(canon(c) == canon(a))
     assert(a.size == 120)
@@ -105,7 +102,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("salted repartition occupies every partition with balanced load " +
     "(no double-hash collapse)") {
-    // regression pin: repartition(P, pmod(hash+salt, P)) lets
+    // regression pin: repartition(P, pmod(hash, P)) lets
     // HashPartitioning RE-hash the pre-bucketed [0,P) value, collapsing
     // the layout to ~(1-1/e)P occupied partitions with up to 4x hot bins
     // (measured: 37/64 at the bench's P=64). The fixed full-range-hash
@@ -153,19 +150,27 @@ class PipelineSpec extends AnyFunSuite {
     results.unpersist()
   }
 
+  /** The buckets the manifest log lists as committed. */
+  private def committedBuckets(dir: String): Set[Int] =
+    Snapshot.snapshots(dir).flatMap(_._2.map(_.bucket)).toSet
+
   test("snapshot resume equals cold run") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
     val coldDir = java.nio.file.Files.createTempDirectory("graft-cold").toString
     val docs = ExtractionPipeline.synthDocs(spark, 100, seed = 5, parallelism = 4).cache()
     val cfg = ExtractionPipeline.Config(numPartitions = 4)
+    // a bucket or commit count below 1 is refused
+    for ((nb, per) <- Seq((0, 2), (-1, 2), (8, 0)))
+      intercept[IllegalArgumentException](
+        Snapshot.run(docs, dir, cfg, nBuckets = nb, bucketsPerCommit = per))
 
     // cold run in one go
     Snapshot.run(docs, coldDir, cfg, nBuckets = 8, bucketsPerCommit = 8)
     // interrupted run: 1 commit (2 buckets), then resume
     val first = Snapshot.run(docs, dir, cfg, nBuckets = 8, bucketsPerCommit = 2, maxCommits = 1)
     assert(first.bucketsRun.size == 2)
-    assert(Snapshot.completedBuckets(dir).size == 2)
+    assert(committedBuckets(dir).size == 2)
     val second = Snapshot.run(docs, dir, cfg, nBuckets = 8, bucketsPerCommit = 2)
     assert(second.bucketsSkipped.toSet == first.bucketsRun.toSet)
 
@@ -267,7 +272,7 @@ class PipelineSpec extends AnyFunSuite {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("graft-manifest").toString
-    val log = Snapshot.manifestDir(dir)
+    val log = java.nio.file.Paths.get(dir, "_snapshot")
     Files.createDirectories(log)
     Files.writeString(log.resolve("manifest-0.json"),
       """{
@@ -305,7 +310,7 @@ class PipelineSpec extends AnyFunSuite {
       0L -> Seq(Snapshot.BucketLineage(3, 12, 31, 140, 1, 7),
         Snapshot.BucketLineage(0, 9, 20, 88, 0, 4)),
       1L -> Seq(Snapshot.BucketLineage(1, 10, 10, 50, 2, 0))))
-    assert(Snapshot.completedBuckets(dir) == Set(0, 1, 3))
+    assert(committedBuckets(dir) == Set(0, 1, 3))
 
     val fresh = Files.createTempDirectory("graft-manifest").toString
     val docs = ExtractionPipeline.synthDocs(spark, 20, seed = 13, parallelism = 2)
@@ -313,14 +318,36 @@ class PipelineSpec extends AnyFunSuite {
       nBuckets = 2, bucketsPerCommit = 2)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def keys(dir: String): (Seq[String], Seq[Seq[String]]) = {
-      val root = mapper.readTree(Snapshot.manifestDir(dir).resolve("manifest-0.json").toFile)
+      val root = mapper.readTree(new java.io.File(dir, "_snapshot/manifest-0.json"))
       (root.fieldNames().asScala.toSeq,
         root.get("buckets").elements().asScala.map(_.fieldNames().asScala.toSeq).toSeq)
     }
     val (top, perBucket) = keys(fresh)
     assert(top == keys(dir)._1)
     assert(perBucket.size == 2 && perBucket.forall(_ == keys(dir)._2.head))
-    assert(Snapshot.completedBuckets(fresh) == Set(0, 1))
+    assert(committedBuckets(fresh) == Set(0, 1))
+  }
+
+  /** A URI `outDir` names one store: its manifests land next to its data
+    * under the directory the URI names, nothing appears in the working
+    * directory, and a read through the URI equals one through the plain
+    * path. */
+  test("a file: URI snapshot store keeps its manifests with its data") {
+    import java.nio.file.{Files, Paths}
+    val cwd = new java.io.File(".").getCanonicalFile
+    val before = cwd.list().toSet
+    val tmp = Files.createTempDirectory("graft-uri").toString
+    val uri = "file:" + tmp
+    val docs = ExtractionPipeline.synthDocs(spark, 40, seed = 17, parallelism = 2)
+    Snapshot.run(docs, uri, ExtractionPipeline.Config(numPartitions = 2),
+      nBuckets = 4, bucketsPerCommit = 2)
+    assert(Files.isRegularFile(Paths.get(tmp, "_snapshot", "manifest-0.json")))
+    val stray = cwd.list().toSet -- before
+    assert(stray.isEmpty, s"created in the working directory: ${stray.mkString(", ")}")
+    assert(Snapshot.snapshots(uri).map(_._1) == Seq(0L, 1L))
+    val viaUri = canon(Snapshot.readResults(spark, uri).collect().toSeq)
+    assert(viaUri.size == 40)
+    assert(viaUri == canon(Snapshot.readResults(spark, tmp).collect().toSeq))
   }
 
   test("markdown sink writes a doc_id header, then one line per span") {

@@ -5,8 +5,8 @@ import graft.pipeline.{ExtractionPipeline, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming semantics: AvailableNow incremental extraction is exactly-once
-  * per input file and equivalent to the batch pipeline; stateful running
-  * totals accumulate across micro-batches. */
+  * per input file and equivalent to the batch pipeline; the incremental
+  * dedup and cluster stores equal their batch operators. */
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -46,44 +46,6 @@ class StreamingSpec extends AnyFunSuite {
     def canon(rs: Seq[DocResult]) =
       rs.map(r => (r.doc_id, r.spans, r.failure_code)).sortBy(_._1)
     assert(canon(streamed.toSeq) == canon(batch.toSeq))
-  }
-
-  test("watermarked windowed aggregation drops late data across incremental runs") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-wm").toString
-    val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("ts timestamp, success boolean")
-        .parquet(in)
-      StreamingExtract.failureRates(stream)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append")
-        .start().awaitTermination()
-    }
-    // run 1: windows [10:00:00,10) ×2 events (1 failure), [10:00:10,20) ×1,
-    // plus 10:01:00 to push the watermark to 10:00:30 (30s lag)
-    Seq((ts("2026-01-01 10:00:02"), true), (ts("2026-01-01 10:00:05"), false),
-      (ts("2026-01-01 10:00:12"), true), (ts("2026-01-01 10:01:00"), true))
-      .toDF("ts", "success").write.mode("append").parquet(in)
-    runOnce()
-    // run 2: a LATE event at 10:00:06 (behind the checkpointed 10:00:30
-    // watermark → must be dropped, not added to the already-final window)
-    // and a fresh event at 10:06:00 (its window stays open, never emitted)
-    Seq((ts("2026-01-01 10:00:06"), false), (ts("2026-01-01 10:06:00"), true))
-      .toDF("ts", "success").write.mode("append").parquet(in)
-    runOnce()
-    val rows = spark.read.parquet(out)
-      .collect().map(r => r.getTimestamp(0).toString ->
-        (r.getAs[Long]("n_docs"), r.getAs[Long]("n_failures"))).toMap
-    assert(rows("2026-01-01 10:00:00.0") == ((2L, 1L)),
-      s"late event must NOT be counted in its finalized window: $rows")
-    assert(rows("2026-01-01 10:00:10.0") == ((1L, 0L)), rows.toString)
-    assert(!rows.contains("2026-01-01 10:06:00.0"),
-      "open window (watermark not past its end) must not be emitted in append mode")
   }
 
   test("incremental MinHash dedup over two drops ≡ batch LSH dedup over the union") {
@@ -459,24 +421,5 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("covers through 2"), e2.getMessage)
     IncrementalDedup.withWriterLease(spark, labels) { () }
-  }
-
-  test("mapGroupsWithState running totals accumulate per source") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(String, Int, Boolean)]
-    val totals = StreamingExtract.runningSourceTotals(stream.toDS())
-    val q = totals.writeStream.format("memory").queryName("totals")
-      .outputMode("update").start()
-    stream.addData(("srcA", 5, true), ("srcA", 3, false), ("srcB", 7, true))
-    q.processAllAvailable()
-    stream.addData(("srcA", 2, true))
-    q.processAllAvailable()
-    val rows = spark.sql("select * from totals").as[StreamingExtract.SourceUpdate]
-      .collect().groupBy(_.source).view.mapValues(_.maxBy(_.n_docs)).toMap
-    assert(rows("srcA") == StreamingExtract.SourceUpdate("srcA", 3, 10, 1))
-    assert(rows("srcB") == StreamingExtract.SourceUpdate("srcB", 1, 7, 0))
-    q.stop()
   }
 }

@@ -3,8 +3,8 @@
 
 x3_partition_metrics: recomputes, in pure Python, the per-partition lineage
 rollup that graft.pipeline.ExtractionPipeline.partitionMetrics produces —
-including the doc -> partition assignment itself. Spark's salted
-repartition is `repartition(8, hash(doc_id) ^ salt)` (full-range), which
+including the doc -> partition assignment itself. Spark's hash
+repartition is `repartition(8, hash(doc_id))` (full-range), which
 physically routes each row by HashPartitioning's partition-id expression
 `pmod(murmur3(exprValue), 8)` over the *expression value*; both Murmur3
 layers (Spark's Murmur3_x86_32 variant with seed 42: 4-byte little-endian
@@ -86,14 +86,12 @@ def murmur3_int(v, seed=42):
     return _signed(_fmix(_mixh1(seed & _M, _mixk1(v & _M)), 4))
 
 
-def spark_partition(doc_id, parts=8, salt=0):
-    """Partition index of ExtractionPipeline's salted repartition: the user
-    expression is the full-range salted hash (int XOR, which cannot
-    overflow), and HashPartitioning re-hashes that int value (murmur3, same
-    seed 42) and takes pmod(parts) — Python's % over a signed int equals
-    Spark's pmod."""
-    salted = _signed((murmur3_utf8(doc_id) & _M) ^ (salt & _M))
-    return murmur3_int(salted) % parts
+def spark_partition(doc_id, parts=8):
+    """Partition index of ExtractionPipeline's hash repartition: the user
+    expression is the full-range hash, and HashPartitioning re-hashes that
+    int value (murmur3, same seed 42) and takes pmod(parts) — Python's %
+    over a signed int equals Spark's pmod."""
+    return murmur3_int(murmur3_utf8(doc_id)) % parts
 
 
 # ------------------------------------------------------------ x3 recompute
