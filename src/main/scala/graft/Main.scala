@@ -103,7 +103,8 @@ object Main {
           ExtractionPipeline.extract(DocSources.readDocs(spark, a.req("in")), cfg), out)
         // metrics from the written output's scalar columns (re-running the
         // extraction would cost more than this pruned scan)
-        ExtractionPipeline.partitionMetrics(spark.read.parquet(out), snapshotId = 0)
+        ExtractionPipeline.partitionMetrics(
+          spark.read.schema(DocSources.resultSchema).parquet(out), snapshotId = 0)
           .write.mode("overwrite").parquet(s"$out/_metrics")
       case "resumable" =>
         val report = Snapshot.run(

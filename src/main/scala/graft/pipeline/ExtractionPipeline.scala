@@ -4,17 +4,29 @@ import graft.corpus.Synth
 import graft.kernel.Extract
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, PartitionedFileUtil,
+  RangeExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** The distributed extraction job: `Dataset[Doc]` → `Dataset[DocResult]`.
   *
   * Scale design (north rule: partitioning/shuffle/skew explicit, 10^12 docs):
+  *  - **Shuffle only when the scan cannot spread the work.** `extract`
+  *    reads the input's physical plan at plan time (no job, no option):
+  *    a batch input with no exchange whose scan partitions fill the core
+  *    slots runs the kernel in its scan tasks, one stage with no exchange.
+  *    Spark sizes file splits by bytes and a doc's pages scale with its
+  *    bytes, so byte-balanced splits balance kernel cost. Any other input
+  *    (under-split, streaming, already exchanged) takes the hash exchange.
   *  - **Hash repartition** into `numPartitions` (P) exchange partitions
   *    by the full-range `hash(doc_id)` ahead of the kernel, so hot
   *    key ranges cannot pile into one partition (the reference's
   *    single-container 1000-image batch is exactly this failure mode,
-  *    tests/test_batch_limits.py:195-201). `partition_id` is the exchange
-  *    partition, in [0, P).
+  *    tests/test_batch_limits.py:195-201). On both paths `partition_id` is
+  *    pmod(hash(hash(doc_id)), P), which on this one is the row's exchange
+  *    partition.
   *  - **One task per core slot after the exchange**: a narrow coalesce runs
   *    the kernel and its sink in min(P, slots) tasks, each reading
   *    P/slots exchange partitions, so per-task fixed costs (a parquet
@@ -32,9 +44,10 @@ import org.apache.spark.sql.functions._
   */
 object ExtractionPipeline {
 
-  /** @param numPartitions hash exchange partitions (P): the skew unit and
-    *                      the range of `partition_id`; the kernel+sink
-    *                      stage runs min(P, slots) tasks
+  /** @param numPartitions P, the range of `partition_id`; on the exchange
+    *                      path also the exchange partitions (the skew
+    *                      unit), and the kernel+sink stage runs
+    *                      min(P, slots) tasks
     * @param mode          kernel routing mode */
   final case class Config(
       numPartitions: Int = 32,
@@ -52,6 +65,19 @@ object ExtractionPipeline {
   def extract(docs: Dataset[Doc], cfg: Config = Config()): Dataset[DocResult] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val slots = spark.sparkContext.defaultParallelism
+    val opts = Extract.Options(mode = cfg.mode)
+    // kernel in place: the scan's own byte-balanced splits already occupy
+    // every core slot, so the kernel runs in the scan tasks, with no
+    // exchange, no span packing and no second stage. `partition_id` is the
+    // same column the exchange path computes.
+    if (plannedSplits(docs).exists(_ >= slots))
+      return docs.select($"doc_id", $"spans",
+          pmod(hash(hash($"doc_id")), lit(cfg.numPartitions)))
+        .as[(String, Seq[Span], Int)]
+        .mapPartitions(_.map { case (id, spans, pid) =>
+          Extract.extractDoc(Doc(id, spans), opts).copy(partition_id = pid)
+        })
 
     // hash repartition: explicit skew defusal for hot doc_id ranges.
     // The partition expression is the FULL-RANGE hash, not
@@ -63,7 +89,6 @@ object ExtractionPipeline {
     // letting the partitioner mod the re-hashed full-range int keeps all
     // P partitions uniformly loaded.
     val key = hash($"_1")
-    val opts = Extract.Options(mode = cfg.mode)
 
     // single scan, single shuffle: whole doc through the kernel. The
     // span array crosses the exchange PACKED into one binary blob
@@ -81,11 +106,46 @@ object ExtractionPipeline {
       .repartition(cfg.numPartitions, key)
       .select($"_1", $"_2", pmod(hash(key), lit(cfg.numPartitions)).as("_3"))
       .as[(String, Array[Byte], Int)]
-      .coalesce(math.min(cfg.numPartitions, spark.sparkContext.defaultParallelism))
+      .coalesce(math.min(cfg.numPartitions, slots))
       .mapPartitions(_.map { case (id, blob, pid) =>
-        Extract.extractDoc(graft.model.Doc(id, SpanCodec.unpack(blob)), opts)
+        Extract.extractDoc(Doc(id, SpanCodec.unpack(blob)), opts)
           .copy(partition_id = pid)
       })
+  }
+
+  /** The number of tasks `docs`' own plan runs in, read off its physical
+    * plan: no RDD is built and no job runs. None for a streaming input, a
+    * plan with an exchange, and a leaf other than a file scan or a range.
+    * A wrong count costs speed, never rows: both paths of [[extract]] give
+    * the same results. */
+  private def plannedSplits(docs: Dataset[_]): Option[Int] = {
+    def splits(plan: SparkPlan): Option[Int] = plan match {
+      case s: FileSourceScanExec if !s.bucketedScan => Some(fileSplits(s))
+      case r: RangeExec => Some(r.numSlices)
+      case _: Exchange => None
+      case c: CoalesceExec => splits(c.child).map(math.min(_, c.numPartitions))
+      case u: UnaryExecNode => splits(u.child)
+      case _ => None
+    }
+    if (docs.isStreaming) None else splits(docs.queryExecution.executedPlan)
+  }
+
+  /** The scan's task count as `FileSourceScanExec` sizes it: its listed
+    * files, split at Spark's max split size and packed into
+    * `FilePartition`s. */
+  private def fileSplits(scan: FileSourceScanExec): Int = {
+    val relation = scan.relation
+    val session = relation.sparkSession
+    val listing = scan.selectedPartitions
+    val maxSplit = FilePartition.maxSplitBytes(session, listing)
+    val files = listing.filePartitionIterator.flatMap { p =>
+      p.files.flatMap { f =>
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          relation.fileFormat.isSplitable(session, relation.options, f.getPath),
+          maxSplit, p.values)
+      }
+    }.toSeq.sortBy(-_.length)
+    FilePartition.getFilePartitions(session, files, maxSplit).size
   }
 
   /** Production span dump: results exploded to one row per span with
@@ -95,8 +155,8 @@ object ExtractionPipeline {
     * dump is deterministic; at 100 TB a total sort of every span would be a
     * cluster-wide shuffle with no consumer. All downstream operators key on
     * doc_id, so doc-local ordering is all the pipeline ever needs.
-    * PlanSpec asserts this path has exactly one exchange (the hash one)
-    * and no range partitioning. */
+    * PlanSpec asserts this path has no range partitioning and at most the
+    * one hash exchange of [[extract]]. */
   def extractSpans(docs: Dataset[Doc], cfg: Config = Config()): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._

@@ -7,6 +7,7 @@ import graft.sources.DocSources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Snapshot-manifest checkpointing: resumable extraction runs with
   * per-bucket lineage (north rule: "resumable from checkpoint, snapshot
@@ -96,7 +97,8 @@ object Snapshot {
       // lineage describes what is durable: the written directory's scalar
       // columns, re-read
       val lineage = ExtractionPipeline.rollup(
-          spark.read.parquet(dir).withColumn("bucket", bucket), "bucket")
+          spark.read.schema(DocSources.resultSchema).parquet(dir).withColumn("bucket", bucket),
+          "bucket")
         .select("bucket", "n_docs", "n_pages", "n_spans", "n_failures", "wall_ms")
         .as[BucketLineage].collect().toSeq
       commitManifest(outDir, Manifest(k, lineage))
@@ -108,27 +110,32 @@ object Snapshot {
     * log, never from what happens to sit in the data directory — a crash
     * between the parquet write and the manifest commit leaves an orphaned
     * `snapshot=K` dir that no reader must see (run() overwrites it on
-    * retry). Realized as readAt of the latest committed id. */
+    * retry). Equal to [[readAt]] of the latest committed id, with one
+    * read of the manifest log. */
   def readResults(spark: SparkSession, outDir: String): Dataset[DocResult] =
-    readAt(spark, outDir, snapshots(outDir).lastOption.map(_._1).getOrElse(-1L))
+    readCommitted(spark, outDir, snapshots(outDir).map(_._1))
 
   /** Iceberg-style time travel: the table as of snapshot `snapshotId`
     * (inclusive). Visibility is defined by the immutable manifest log —
-    * later commits simply don't exist for this reader. The filter is on the
-    * `snapshot=` partition directory, so pruning happens at the file
-    * listing, never by scanning newer data. */
-  def readAt(spark: SparkSession, outDir: String, snapshotId: Long): Dataset[DocResult] = {
+    * later commits simply don't exist for this reader. */
+  def readAt(spark: SparkSession, outDir: String, snapshotId: Long): Dataset[DocResult] =
+    readCommitted(spark, outDir, snapshots(outDir).map(_._1).filter(_ <= snapshotId))
+
+  /** The results of the `committed` snapshot ids, one manifest-log read
+    * done by the caller. Only manifest-committed ids are visible — an
+    * isin() on the committed set (not `<= id`) so orphaned data dirs from
+    * a crash between the parquet write and the manifest commit never leak
+    * into a read. The filter is on the `snapshot=` partition column, so
+    * pruning happens at the file listing, never by scanning newer data;
+    * the read schema is the written one, so no inference job runs. */
+  private def readCommitted(spark: SparkSession, outDir: String,
+                            committed: Seq[Long]): Dataset[DocResult] = {
     import spark.implicits._
-    // only manifest-committed ids are visible — an isin() on the committed
-    // set (not `<= id`) so orphaned data dirs from a crash between the
-    // parquet write and the manifest commit never leak into a read; the
-    // filter stays on the partition column (pruned at file listing)
-    val committed = snapshots(outDir).map(_._1).filter(_ <= snapshotId)
     if (committed.isEmpty) return spark.emptyDataset[DocResult]
-    spark.read.parquet(s"$outDir/data")
+    spark.read.schema(DocSources.resultSchema.add("snapshot", LongType))
+      .parquet(s"$outDir/data")
       .filter(col("snapshot").isin(committed: _*))
-      .select("doc_id", "spans", "success", "failure_code", "n_spans",
-        "n_pages", "partition_id", "kernel_nanos")
+      .drop("snapshot")
       .as[DocResult]
   }
 

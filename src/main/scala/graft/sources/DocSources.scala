@@ -1,8 +1,14 @@
 package graft.sources
 
 import graft.model.{Doc, DocResult}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Sources and sinks (SURVEY.md §2.1).
   *
@@ -16,10 +22,38 @@ import org.apache.spark.sql.functions._
   */
 object DocSources {
 
-  /** S3: the Doc table (columnar parquet; pruning + pushdown apply). */
+  /** The one read schema of a Doc table: the `Doc` encoder's. */
+  val docSchema: StructType = Encoders.product[Doc].schema
+
+  /** The schema `writeResults` writes: the read schema of every results
+    * directory the program wrote itself. */
+  val resultSchema: StructType = Encoders.product[DocResult].schema
+
+  /** S3: the Doc table (columnar parquet; pruning + pushdown apply), read
+    * with [[docSchema]], so no schema-inference job runs. A declared schema
+    * reads a missing column as nulls, so the first file's footer is checked
+    * on the driver: a `doc_id` or `spans` column that is missing or of
+    * another type fails here, before any task, naming the column. Other
+    * columns are ignored. */
   def readDocs(spark: SparkSession, path: String): Dataset[Doc] = {
     import spark.implicits._
-    spark.read.parquet(path).as[Doc]
+    val docs = spark.read.schema(docSchema).parquet(path)
+    docs.inputFiles.headOption.foreach(requireDocColumns(spark, path, _))
+    docs.as[Doc]
+  }
+
+  private def requireDocColumns(spark: SparkSession, path: String, file: String): Unit = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(new java.net.URI(file)), spark.sparkContext.hadoopConfiguration))
+    val found = try new ParquetToSparkSchemaConverter(SQLConf.get)
+        .convert(reader.getFileMetaData.getSchema)
+      finally reader.close()
+    docSchema.foreach { want =>
+      val got = found.find(_.name == want.name).map(_.dataType.catalogString)
+      require(got.contains(want.dataType.catalogString),
+        s"readDocs $path: column ${want.name} must be ${want.dataType.catalogString}, " +
+          s"but $file has ${got.getOrElse("no such column")}")
+    }
   }
 
   /** S1/S2: binary media files → (path, length, content, base64) rows.

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.model.Doc
 import graft.pipeline.ExtractionPipeline
-import org.apache.spark.sql.{Encoders, SparkSession}
+import graft.sources.DocSources
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Incremental extraction as a Structured Streaming job.
@@ -16,8 +17,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   */
 object StreamingExtract {
 
-  val docSchema = Encoders.product[Doc].schema
-
   /** Start (or resume) incremental extraction: new parquet files under
     * `inDir` → extracted results appended under `outDir`. Each micro-batch
     * runs the batch job, [[ExtractionPipeline.extract]], with `cfg`. */
@@ -26,7 +25,7 @@ object StreamingExtract {
           cfg: ExtractionPipeline.Config = ExtractionPipeline.Config()): StreamingQuery = {
     import spark.implicits._
     val docs = spark.readStream
-      .schema(docSchema)
+      .schema(DocSources.docSchema)
       .option("maxFilesPerTrigger", 64)
       .parquet(inDir)
       .as[Doc]

@@ -39,9 +39,11 @@ class PlanSpec extends AnyFunSuite {
       p.take(1200))
   }
 
+  // The exchange pins below run on an under-split input (one scan
+  // partition on four core slots): only such an input takes the exchange.
   test("extraction pipeline has exactly one shuffle (the salting exchange)") {
     import spark.implicits._
-    val docs = ExtractionPipeline.synthDocs(spark, 100, parallelism = 4)
+    val docs = ExtractionPipeline.synthDocs(spark, 100, parallelism = 1)
     val results = ExtractionPipeline.extract(docs)
     val plan = results.queryExecution.executedPlan.toString
     val exchanges = "ShuffleExchange|Exchange hashpartitioning".r
@@ -51,7 +53,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("production span dump has no global sort: one exchange, no range partitioning") {
     import spark.implicits._
-    val docs = ExtractionPipeline.synthDocs(spark, 100, parallelism = 4)
+    val docs = ExtractionPipeline.synthDocs(spark, 100, parallelism = 1)
     val plan = ExtractionPipeline.extractSpans(docs)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("rangepartitioning"),
@@ -96,17 +98,18 @@ class PlanSpec extends AnyFunSuite {
     finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
-  /** P = 32 hash exchange partitions on the local[4] session: the one
-    * exchange keeps all 32, the kernel and the sink run in 4 tasks (one
-    * per core slot), and `partition_id` is still each row's real exchange
-    * partition, HashPartitioning's pmod(murmur3(hash(doc_id)), P). */
+  /** P = 32 hash exchange partitions on the local[4] session, for an
+    * input of one scan partition: the one exchange keeps all 32, the kernel
+    * and the sink run in 4 tasks (one per core slot), and `partition_id` is
+    * still each row's real exchange partition, HashPartitioning's
+    * pmod(murmur3(hash(doc_id)), P). */
   test("extraction at P = 32 shuffles into 32 partitions and runs 4 kernel+sink tasks") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.functions._
     val parts = 32
     val slots = spark.sparkContext.defaultParallelism
     assert(slots == 4)
-    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 5, parallelism = 4)
+    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 5, parallelism = 1)
     val results = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = parts))
     val plan = staticPlan(results)
@@ -129,6 +132,60 @@ class PlanSpec extends AnyFunSuite {
     graft.sources.DocSources.writeResults(results, dir)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length == math.min(parts, slots), files.map(_.getName).mkString(", "))
+  }
+
+  /** An input whose scan partitions fill the core slots runs the kernel in
+    * its scan tasks: no exchange, as many kernel+sink tasks as scan
+    * partitions, and `partition_id` the same column the exchange path
+    * computes, pmod(hash(hash(doc_id)), P). */
+  test("a well-split input runs the kernel in its scan tasks, with no exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions._
+    val parts = 32
+    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 5, parallelism = 4)
+    val cfg = ExtractionPipeline.Config(numPartitions = parts)
+    val results = ExtractionPipeline.extract(docs, cfg)
+    val plan = staticPlan(results)
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, s"exchange in:\n$plan")
+    assert(plan.execute().getNumPartitions == 4)
+    val rows = results.collect()
+    assert(rows.length == 200 && rows.map(_.partition_id).toSet.size > 4)
+    assert(results.where(col("partition_id") =!=
+      pmod(hash(hash(col("doc_id"))), lit(parts))).isEmpty)
+
+    val spans = ExtractionPipeline.extractSpans(docs, cfg).queryExecution.executedPlan.toString
+    assert(!"Exchange".r.findFirstIn(spans).isDefined, s"the span dump shuffles:\n$spans")
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-inplace").toString
+    graft.sources.DocSources.writeResults(results, dir)
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 4, files.map(_.getName).mkString(", "))
+  }
+
+  /** The split count of a parquet scan is read off its file listing with
+    * Spark's own sizing: the kernel runs in exactly the scan's tasks when
+    * they fill the slots, and a one-file corpus still takes the exchange. */
+  test("a parquet corpus takes the in-place path exactly when its scan splits fill the slots") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.sources.DocSources
+    val base = java.nio.file.Files.createTempDirectory("graft-splits").toString
+    val synth = ExtractionPipeline.synthDocs(spark, 400, seed = 21, parallelism = 16)
+    synth.write.parquet(s"$base/many")
+    synth.coalesce(1).write.parquet(s"$base/one")
+    val cfg = ExtractionPipeline.Config(numPartitions = 8)
+    def exchangesAndTasks(dir: String): (Int, Int, Int) = {
+      val scanTasks = DocSources.readDocs(spark, dir).queryExecution.executedPlan
+        .execute().getNumPartitions
+      val plan = staticPlan(ExtractionPipeline.extract(DocSources.readDocs(spark, dir), cfg))
+      (plan.collect { case e: ShuffleExchangeLike => e }.size, scanTasks,
+        plan.execute().getNumPartitions)
+    }
+    val (manyExchanges, manyScan, manyKernel) = exchangesAndTasks(s"$base/many")
+    assert(manyScan >= spark.sparkContext.defaultParallelism)
+    assert(manyExchanges == 0 && manyKernel == manyScan, (manyExchanges, manyScan, manyKernel))
+    val (oneExchanges, oneScan, oneKernel) = exchangesAndTasks(s"$base/one")
+    assert(oneScan == 1 && oneExchanges == 1 && oneKernel == 4,
+      (oneExchanges, oneScan, oneKernel))
   }
 
   test("x3 rollup is a column aggregate: no MapGroups, no exchange carries spans") {

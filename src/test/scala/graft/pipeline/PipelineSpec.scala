@@ -18,12 +18,15 @@ class PipelineSpec extends AnyFunSuite {
 
   test("pipeline result is independent of partitioning and salt") {
     import spark.implicits._
-    val docs = ExtractionPipeline.synthDocs(spark, 120, seed = 7, parallelism = 4).cache()
+    // one scan partition takes the exchange at P = 3 and 11; four fill the
+    // slots and run the kernel in place at P = 8
+    val docs = ExtractionPipeline.synthDocs(spark, 120, seed = 7, parallelism = 1).cache()
     val a = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 3)).collect().toSeq
     val b = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 11)).collect().toSeq
-    val c = ExtractionPipeline.extract(docs,
+    val c = ExtractionPipeline.extract(
+      ExtractionPipeline.synthDocs(spark, 120, seed = 7, parallelism = 4),
       ExtractionPipeline.Config(numPartitions = 8)).collect().toSeq
     assert(canon(a) == canon(b))
     assert(canon(c) == canon(a))
@@ -72,14 +75,74 @@ class PipelineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](SpanCodec.unpack(overrun))
   }
 
+  /** The number of exchanges in the plan `extract` gives `docs`. */
+  private def exchanges(results: org.apache.spark.sql.Dataset[_]): Int =
+    "Exchange hashpartitioning".r.findAllIn(results.queryExecution.executedPlan.toString).size
+
   test("packed-span shuffle path ≡ direct kernel on the synthetic corpus") {
-    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 13, parallelism = 4).cache()
+    // one scan partition on four core slots: the exchange path
+    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 13, parallelism = 1).cache()
     val direct = docs.collect().map(d => Extract.extractDoc(d)).toSeq
-    val packed = ExtractionPipeline.extract(docs,
-      ExtractionPipeline.Config(numPartitions = 5)).collect().toSeq
+    val results = ExtractionPipeline.extract(docs, ExtractionPipeline.Config(numPartitions = 5))
+    assert(exchanges(results) == 1)
+    val packed = results.collect().toSeq
     assert(canon(packed) == canon(direct))
     assert(packed.size == 200)
     docs.unpersist()
+  }
+
+  test("in-place kernel path ≡ direct kernel on a well-split synthetic corpus") {
+    val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 13, parallelism = 4)
+    val direct = docs.collect().map(d => Extract.extractDoc(d)).toSeq
+    val results = ExtractionPipeline.extract(docs, ExtractionPipeline.Config(numPartitions = 5))
+    assert(exchanges(results) == 0)
+    val inPlace = results.collect().toSeq
+    assert(canon(inPlace) == canon(direct))
+    assert(inPlace.size == 200)
+  }
+
+  /** Reading a corpus and planning its extraction start no job; the pass
+    * over a well-split corpus is one job: scan, kernel and sink. */
+  test("building readDocs + extract starts no job, and a well-split pass runs one") {
+    import graft.sources.DocSources
+    val base = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val docs = ExtractionPipeline.synthDocs(spark, 300, seed = 19, parallelism = 16)
+    docs.write.parquet(s"$base/corpus")
+    val cfg = ExtractionPipeline.Config(numPartitions = 32)
+    assert(SparkTestSession.jobsStarted {
+      ExtractionPipeline.extract(DocSources.readDocs(spark, s"$base/corpus"), cfg): Unit
+    } == 0)
+    assert(SparkTestSession.jobsStarted {
+      DocSources.writeResults(
+        ExtractionPipeline.extract(DocSources.readDocs(spark, s"$base/corpus"), cfg), s"$base/out")
+    } == 1)
+    val written = spark.read.schema(DocSources.resultSchema).parquet(s"$base/out")
+      .as[DocResult](org.apache.spark.sql.Encoders.product[DocResult]).collect().toSeq
+    assert(canon(written) == canon(docs.collect().map(d => Extract.extractDoc(d)).toSeq))
+  }
+
+  /** `readDocs` reads with the `Doc` schema; a corpus that does not have
+    * it fails on the driver, before any task, naming the column. */
+  test("readDocs fails before any task on a missing or mistyped column, and ignores extras") {
+    import graft.sources.DocSources
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-read").toString
+    val good = Seq(Doc("d1", Seq(Span("text", "# Title", "", 0))), Doc("d2", Seq.empty))
+    good.toDF().drop("doc_id").write.parquet(s"$base/no-id")
+    good.toDF().drop("spans").write.parquet(s"$base/no-spans")
+    Seq(("d1", "# Title")).toDF("doc_id", "spans").write.parquet(s"$base/string-spans")
+    good.toDF().withColumn("lang", lit("en")).write.parquet(s"$base/extra")
+    for ((dir, column) <- Seq("no-id" -> "doc_id", "no-spans" -> "spans",
+        "string-spans" -> "spans")) {
+      var msg = ""
+      assert(SparkTestSession.jobsStarted {
+        msg = intercept[IllegalArgumentException](
+          DocSources.readDocs(spark, s"$base/$dir")).getMessage
+      } == 0, dir)
+      assert(msg.contains(s"column $column "), s"$dir: $msg")
+    }
+    assert(DocSources.readDocs(spark, s"$base/extra").collect().sortBy(_.doc_id).toSeq == good)
   }
 
   test("unreadable span input is one KERNEL_ERROR row per doc, equal to the direct kernel") {
@@ -106,8 +169,9 @@ class PipelineSpec extends AnyFunSuite {
     // HashPartitioning RE-hash the pre-bucketed [0,P) value, collapsing
     // the layout to ~(1-1/e)P occupied partitions with up to 4x hot bins
     // (measured: 37/64 at the bench's P=64). The fixed full-range-hash
-    // expression must hit all P partitions with near-uniform load.
-    val docs = ExtractionPipeline.synthDocs(spark, 1024, seed = 9, parallelism = 4)
+    // expression must hit all P partitions with near-uniform load. One
+    // scan partition on four core slots: the exchange path.
+    val docs = ExtractionPipeline.synthDocs(spark, 1024, seed = 9, parallelism = 1)
     val loads = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 8))
       .groupByKey(_.partition_id)(org.apache.spark.sql.Encoders.scalaInt)

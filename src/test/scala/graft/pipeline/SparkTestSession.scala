@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -52,6 +53,35 @@ object SparkTestSession {
       Await.result(writePlan.future, Duration(30, "s"))
     } finally spark.listenerManager.unregister(listener)
     (aqe.collect(plan) { case s: SortExec => s }, plan)
+  }
+
+  /** The Spark jobs `body` starts on this thread. The listener bus
+    * delivers events in order, so once a marker job run after `body` has
+    * been seen, every job `body` started has been seen too. */
+  def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def inGroup(g: String)(run: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try run finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup(group)(body)
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count(): Unit)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(marker)) {
+        assert(System.nanoTime() < deadline, "the marker job was never seen")
+        Thread.sleep(5)
+      }
+    } finally sc.removeSparkListener(listener)
+    groups.toArray.count(_ == group)
   }
 
   /** The subdirectories of `dir`, hidden `_`/`.` ones left out. */

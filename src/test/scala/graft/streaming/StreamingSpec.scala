@@ -25,9 +25,19 @@ class StreamingSpec extends AnyFunSuite {
 
     val batch1 = ExtractionPipeline.synthDocs(spark, 40, seed = 11, parallelism = 2)
     batch1.write.mode("append").parquet(in)
-    StreamingExtract.run(spark, in, out, cp).awaitTermination()
+    val first = StreamingExtract.run(spark, in, out, cp)
+    first.awaitTermination()
     val n1 = spark.read.parquet(out).count()
     assert(n1 == 40)
+    // a streaming input always plans the hash exchange (walked through the
+    // micro-batch's adaptive query stages)
+    val microBatch = first.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+    val exchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(microBatch) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, microBatch)
 
     // second increment: only the new files are processed on resume
     val batch2 = ExtractionPipeline.synthDocs(spark, 25, seed = 12, parallelism = 2)
