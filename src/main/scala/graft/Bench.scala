@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions._
 object Bench {
 
   /** `aqeDefault`: the scaling-level workers run with AQE OFF — the
-    * extraction pass is a fixed-shape two-stage job over 64 uniform
-    * synthetic partitions, so AQE has nothing to adapt, while its per-
-    * query-stage materialize + replan barrier adds ~0.3-0.5 s of driver-
+    * extraction pass runs the kernel in the tasks of 64 uniform synthetic
+    * partitions and folds one count, so AQE has nothing to adapt, while its
+    * per-query-stage materialize + replan barrier adds ~0.3-0.5 s of driver-
     * side latency per shuffle boundary that does NOT scale with cores
     * (measured: hi-level wall 7.0 → 5.8 s, lo 23.9 → 21.7 s; component
     * A/B shows the shuffle stage scaling at ~1.0 without the barrier vs

@@ -16,11 +16,12 @@ import org.apache.spark.sql.SparkSession
   *   synth      --out <dir> [--docs N] [--partitions P]
   * }}}
   *
-  * `--partitions P` (default: 4 × core slots) is the number of hash
-  * exchange partitions, the skew unit and the range of `partition_id`. The
-  * kernel and the sink run min(P, slots) tasks, so `extract` writes
-  * min(P, slots) result files and `resumable` at most that many per
-  * commit. For `synth` it is the generator's task count.
+  * `--partitions P` (default: 4 × core slots) is the range of
+  * `partition_id`. An input that takes the hash exchange is exchanged into
+  * min(P, slots) partitions, in which the kernel and the sink run, so
+  * `extract` then writes min(P, slots) result files and `resumable` at
+  * most that many per commit; a well-split input writes one file per scan
+  * partition. For `synth` it is the generator's task count.
   *
   * Flags are checked before the session is built: an unknown flag, a flag
   * without a value, a count that is not a number ≥ 1 or a missing required

@@ -4,9 +4,8 @@ import graft.corpus.Synth
 import graft.kernel.Extract
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, PartitionedFileUtil,
-  RangeExec, SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, RangeExec, SparkPlan,
+  UnaryExecNode}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
@@ -19,22 +18,15 @@ import org.apache.spark.sql.functions._
   *    slots runs the kernel in its scan tasks, one stage with no exchange.
   *    Spark sizes file splits by bytes and a doc's pages scale with its
   *    bytes, so byte-balanced splits balance kernel cost. Any other input
-  *    (under-split, streaming, already exchanged) takes the hash exchange.
-  *  - **Hash repartition** into `numPartitions` (P) exchange partitions
-  *    by the full-range `hash(doc_id)` ahead of the kernel, so hot
-  *    key ranges cannot pile into one partition (the reference's
+  *    (under-split, streaming, already exchanged) is first hash-exchanged
+  *    by `doc_id` into min(P, slots) partitions, one per core slot: hot key
+  *    ranges cannot pile into one partition (the reference's
   *    single-container 1000-image batch is exactly this failure mode,
-  *    tests/test_batch_limits.py:195-201). On both paths `partition_id` is
-  *    pmod(hash(hash(doc_id)), P), which on this one is the row's exchange
-  *    partition.
-  *  - **One task per core slot after the exchange**: a narrow coalesce runs
-  *    the kernel and its sink in min(P, slots) tasks, each reading
-  *    P/slots exchange partitions, so per-task fixed costs (a parquet
-  *    sink's per-file setup above all) are paid once per slot, not once
-  *    per exchange partition; a sink writes min(P, slots) files per pass.
-  *  - **Packed spans across the exchange**: each doc's span array is
-  *    shipped as one [[SpanCodec]] blob and unpacked right before the
-  *    kernel, so the hash exchange is the job's only shuffle.
+  *    tests/test_batch_limits.py:195-201), and per-task fixed costs (a
+  *    parquet sink's per-file setup above all) are paid once per slot, so
+  *    a sink writes min(P, slots) files per pass.
+  *  - **One kernel stage on both paths**: the same body runs over either
+  *    input, and `partition_id` is pmod(hash(hash(doc_id)), P) on both.
   *  - **Executor-warm kernel**: the kernel is a JVM object (lazy-initialized
   *    per executor, like the reference's @modal.enter one-time model load,
   *    modal_gpu.py:92-179); `mapPartitions` amortizes any setup across the
@@ -44,10 +36,9 @@ import org.apache.spark.sql.functions._
   */
 object ExtractionPipeline {
 
-  /** @param numPartitions P, the range of `partition_id`; on the exchange
-    *                      path also the exchange partitions (the skew
-    *                      unit), and the kernel+sink stage runs
-    *                      min(P, slots) tasks
+  /** @param numPartitions P, the range of `partition_id`; an input that
+    *                      takes the exchange is hash-exchanged into
+    *                      min(P, slots) partitions
     * @param mode          kernel routing mode */
   final case class Config(
       numPartitions: Int = 32,
@@ -67,60 +58,28 @@ object ExtractionPipeline {
     import spark.implicits._
     val slots = spark.sparkContext.defaultParallelism
     val opts = Extract.Options(mode = cfg.mode)
-    // kernel in place: the scan's own byte-balanced splits already occupy
-    // every core slot, so the kernel runs in the scan tasks, with no
-    // exchange, no span packing and no second stage. `partition_id` is the
-    // same column the exchange path computes.
-    if (plannedSplits(docs).exists(_ >= slots))
-      return docs.select($"doc_id", $"spans",
-          pmod(hash(hash($"doc_id")), lit(cfg.numPartitions)))
-        .as[(String, Seq[Span], Int)]
-        .mapPartitions(_.map { case (id, spans, pid) =>
-          Extract.extractDoc(Doc(id, spans), opts).copy(partition_id = pid)
-        })
-
-    // hash repartition: explicit skew defusal for hot doc_id ranges.
-    // The partition expression is the FULL-RANGE hash, not
-    // pmod(hash, P): repartition's HashPartitioning re-hashes the
-    // expression value to pick the partition, so a pre-bucketed [0,P)
-    // expression collapses into ~(1-1/e)·P occupied partitions with up to
-    // 4x-loaded hot bins (measured at P=64: 37 occupied, max load 4 —
-    // idle executors + stragglers at every scale). Hashing first and
-    // letting the partitioner mod the re-hashed full-range int keeps all
-    // P partitions uniformly loaded.
-    val key = hash($"_1")
-
-    // single scan, single shuffle: whole doc through the kernel. The
-    // span array crosses the exchange PACKED into one binary blob
-    // (SpanCodec): UnsafeRow's ~48 fixed bytes per span struct are a
-    // large share of this string-heavy shuffle, and shuffle bytes ride
-    // the one shared DRAM bus while pack/unpack CPU scales with cores —
-    // measured shuffle-stage wall -26% at 16 cores, -3% at 4
-    // (BASELINE.md). Exact round-trip is property-tested; equality with
-    // the direct kernel is pinned in PipelineSpec.
-    //
-    // The coalesce (one task per core slot, see the object doc) makes the
-    // task index no partition id: `partition_id` is HashPartitioning's own
-    // pmod(murmur3(key), P), the row's exchange partition.
-    docs.map(d => (d.doc_id, SpanCodec.pack(d.spans)))
-      .repartition(cfg.numPartitions, key)
-      .select($"_1", $"_2", pmod(hash(key), lit(cfg.numPartitions)).as("_3"))
-      .as[(String, Array[Byte], Int)]
-      .coalesce(math.min(cfg.numPartitions, slots))
-      .mapPartitions(_.map { case (id, blob, pid) =>
-        Extract.extractDoc(Doc(id, SpanCodec.unpack(blob)), opts)
-          .copy(partition_id = pid)
+    // the scan's own byte-balanced splits already occupy every core slot:
+    // the kernel runs in the scan tasks; otherwise one hash exchange
+    // spreads the docs over the slots
+    val input =
+      if (plannedSplits(docs).exists(_ >= slots)) docs
+      else docs.repartition(math.min(cfg.numPartitions, slots), $"doc_id")
+    input.select($"doc_id", $"spans", pmod(hash(hash($"doc_id")), lit(cfg.numPartitions)))
+      .as[(String, Seq[Span], Int)]
+      .mapPartitions(_.map { case (id, spans, pid) =>
+        Extract.extractDoc(Doc(id, spans), opts).copy(partition_id = pid)
       })
   }
 
   /** The number of tasks `docs`' own plan runs in, read off its physical
-    * plan: no RDD is built and no job runs. None for a streaming input, a
-    * plan with an exchange, and a leaf other than a file scan or a range.
+    * plan: a file scan's count is its own RDD's, as Spark sizes its splits,
+    * and no job runs. None for a streaming input, a plan with an exchange,
+    * and a leaf other than a file scan or a range.
     * A wrong count costs speed, never rows: both paths of [[extract]] give
     * the same results. */
   private def plannedSplits(docs: Dataset[_]): Option[Int] = {
     def splits(plan: SparkPlan): Option[Int] = plan match {
-      case s: FileSourceScanExec if !s.bucketedScan => Some(fileSplits(s))
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
       case r: RangeExec => Some(r.numSlices)
       case _: Exchange => None
       case c: CoalesceExec => splits(c.child).map(math.min(_, c.numPartitions))
@@ -128,24 +87,6 @@ object ExtractionPipeline {
       case _ => None
     }
     if (docs.isStreaming) None else splits(docs.queryExecution.executedPlan)
-  }
-
-  /** The scan's task count as `FileSourceScanExec` sizes it: its listed
-    * files, split at Spark's max split size and packed into
-    * `FilePartition`s. */
-  private def fileSplits(scan: FileSourceScanExec): Int = {
-    val relation = scan.relation
-    val session = relation.sparkSession
-    val listing = scan.selectedPartitions
-    val maxSplit = FilePartition.maxSplitBytes(session, listing)
-    val files = listing.filePartitionIterator.flatMap { p =>
-      p.files.flatMap { f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath,
-          relation.fileFormat.isSplitable(session, relation.options, f.getPath),
-          maxSplit, p.values)
-      }
-    }.toSeq.sortBy(-_.length)
-    FilePartition.getFilePartitions(session, files, maxSplit).size
   }
 
   /** Production span dump: results exploded to one row per span with

@@ -2,18 +2,16 @@ package graft.pipeline
 
 import graft.model.Span
 
-/** Compact binary encoding for a document's span array, used ACROSS the
-  * hash exchange in [[ExtractionPipeline.extract]].
+/** Compact binary encoding for a document's span array. It is off the
+  * pipeline's path: [[ExtractionPipeline.extract]] ships spans across its
+  * hash exchange in Spark's own row form, which measured level with this
+  * codec on both benchmark workloads. It is kept only for the benchmark's
+  * codec micro-measurement (`Micro.codec`), and goes when that does.
   *
-  * Why: the shuffle ships every document's `array<struct<kind, text,
-  * media_ref, offset>>`; Spark's UnsafeRow layout spends ~48 bytes of fixed
-  * overhead per struct element (element offset slot + null bitset + four
-  * 8-byte field slots + 8-byte alignment of every string) before any
-  * payload. On the string-heavy extraction corpus that overhead is a large
-  * fraction of the shuffle volume — and shuffle bytes ride the machine's
-  * ONE shared DRAM bus while the pack/unpack CPU scales with cores, so
-  * trading fixed bytes for per-core cycles directly buys multi-core
-  * scaling (the 4→16 pair in BASELINE.md).
+  * The codec trades bytes for CPU: Spark's UnsafeRow layout spends ~48
+  * bytes of fixed overhead per span struct (element offset slot + null
+  * bitset + four 8-byte field slots + 8-byte alignment of every string)
+  * before any payload, which the blob does not.
   *
   * Layout: varint span count, then per span a kind token (dictionary byte
   * for the input kinds "text"/"media", an inline marker byte plus the

@@ -16,7 +16,7 @@ class PipelineSpec extends AnyFunSuite {
     rs.map(r => (r.doc_id, r.spans, r.success, r.failure_code, r.n_spans, r.n_pages))
       .sortBy(_._1)
 
-  test("pipeline result is independent of partitioning and salt") {
+  test("pipeline result is independent of partitioning") {
     import spark.implicits._
     // one scan partition takes the exchange at P = 3 and 11; four fill the
     // slots and run the kernel in place at P = 8
@@ -79,15 +79,15 @@ class PipelineSpec extends AnyFunSuite {
   private def exchanges(results: org.apache.spark.sql.Dataset[_]): Int =
     "Exchange hashpartitioning".r.findAllIn(results.queryExecution.executedPlan.toString).size
 
-  test("packed-span shuffle path ≡ direct kernel on the synthetic corpus") {
+  test("exchange path ≡ direct kernel on the synthetic corpus") {
     // one scan partition on four core slots: the exchange path
     val docs = ExtractionPipeline.synthDocs(spark, 200, seed = 13, parallelism = 1).cache()
     val direct = docs.collect().map(d => Extract.extractDoc(d)).toSeq
     val results = ExtractionPipeline.extract(docs, ExtractionPipeline.Config(numPartitions = 5))
     assert(exchanges(results) == 1)
-    val packed = results.collect().toSeq
-    assert(canon(packed) == canon(direct))
-    assert(packed.size == 200)
+    val exchanged = results.collect().toSeq
+    assert(canon(exchanged) == canon(direct))
+    assert(exchanged.size == 200)
     docs.unpersist()
   }
 
@@ -163,14 +163,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(canon(piped) == canon(direct))
   }
 
-  test("salted repartition occupies every partition with balanced load " +
-    "(no double-hash collapse)") {
-    // regression pin: repartition(P, pmod(hash, P)) lets
-    // HashPartitioning RE-hash the pre-bucketed [0,P) value, collapsing
-    // the layout to ~(1-1/e)P occupied partitions with up to 4x hot bins
-    // (measured: 37/64 at the bench's P=64). The fixed full-range-hash
-    // expression must hit all P partitions with near-uniform load. One
-    // scan partition on four core slots: the exchange path.
+  test("partition_id occupies every value in [0, P) with balanced load") {
+    // pmod(hash(hash(doc_id)), P) must hit all P values with near-uniform
+    // load: a collapse to ~(1-1/e)P occupied values with up to 4x hot bins
+    // would skew every per-partition metric. One scan partition on four
+    // core slots: the exchange path.
     val docs = ExtractionPipeline.synthDocs(spark, 1024, seed = 9, parallelism = 1)
     val loads = ExtractionPipeline.extract(docs,
       ExtractionPipeline.Config(numPartitions = 8))
